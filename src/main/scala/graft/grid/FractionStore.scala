@@ -1,6 +1,6 @@
 package graft.grid
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -72,18 +72,57 @@ object FractionStore {
   def write(spark: SparkSession, header: GridHeader, fracRows: DataFrame,
             root: String, mode: String = "overwrite"): Unit = {
     header.save(spark, root)
-    // range-partition by (time_chunk, frac_num): each output file covers a
-    // contiguous frac band WITHIN one time_chunk dir, so (a) writes and
-    // subsequent reads parallelize across files (repartition(time_chunk)
-    // alone serialized a whole chunk's data into one file = one task —
-    // measured 30x slower at tile scale), and (b) per-file frac_num
-    // min/max stats still prune rect windows.
+    writeRows(fracRows, root, mode)
+  }
+
+  // range-partition by (time_chunk, frac_num): each output file covers a
+  // contiguous frac band WITHIN one time_chunk dir, so (a) writes and
+  // subsequent reads parallelize across files (repartition(time_chunk)
+  // alone serialized a whole chunk's data into one file = one task —
+  // measured 30x slower at tile scale), and (b) per-file frac_num
+  // min/max stats still prune rect windows.
+  private def canonicalWriter(fracRows: DataFrame): DataFrameWriter[Row] =
     fracRows
       .repartitionByRange(col("time_chunk"), col("frac_num"))
       .sortWithinPartitions(col("time_chunk"), col("frac_num"))
-      .write.mode(mode)
+      .write
       .partitionBy("time_chunk")
+
+  private[grid] def writeRows(fracRows: DataFrame, root: String,
+                              mode: String): Unit =
+    canonicalWriter(fracRows).mode(mode).parquet(dataPath(root))
+
+  /** Replace whole `time_chunk` partitions of the store at `root` with
+    * `fracRows`: every partition holding one of the rows is rewritten to
+    * exactly the rows given for it, and every other partition stays
+    * untouched (dynamic partition overwrite). This is the one
+    * destructive-write path of the store's in-place writers (tail
+    * append, compaction, chunk repair, stale-chunk re-derivation).
+    *
+    * The overwrite mode is an option of this write, not a session
+    * setting: `fracRows` may belong to another session than the
+    * caller's (a streaming micro-batch runs in a clone of it), and a
+    * session setting on the wrong session silently turns the write into
+    * a static overwrite of the WHOLE store.
+    *
+    * `fracRows` may read the very partitions it replaces, so it is
+    * materialized first (localCheckpoint): no task can recompute
+    * against deleted files. The checkpoint is released in a `finally`,
+    * so neither a finished nor a failed rewrite pins its blocks for the
+    * session's lifetime.
+    */
+  def replaceTimeChunks(root: String, fracRows: DataFrame): Unit = {
+    val frozen = fracRows.localCheckpoint()
+    try canonicalWriter(frozen).mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
       .parquet(dataPath(root))
+    finally {
+      // Dataset.unpersist does not reach a local checkpoint (it is no
+      // cache-manager entry): release the checkpointed RDD itself
+      frozen.queryExecution.logical.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+      }.foreach(_.unpersist(blocking = false))
+    }
   }
 
   /** Compact a store's data files back into the canonical layout
@@ -95,9 +134,9 @@ object FractionStore {
     * task scheduling (the classic small-files problem). Chunk
     * CONTENTS are already canonical (one row per (frac_num,
     * time_chunk)); only the file population needs rewriting, so this
-    * is a pure readwrite of the selected partitions: localCheckpoint
-    * first (the rewrite reads the partitions it deletes — same hazard
-    * as IncrementalAppend), then a dynamic-partition-overwrite write.
+    * is a pure readwrite of the selected partitions through
+    * [[replaceTimeChunks]] (the rewrite reads the partitions it
+    * deletes).
     *
     * `timeChunks` is the unit-of-work knob: compacting a 100 TB store
     * in one call would checkpoint the whole store, so production
@@ -134,26 +173,7 @@ object FractionStore {
         .filter(col("time_chunk").isin(cs.map(Integer.valueOf): _*))
       case None => fractions(spark, root)
     }
-    val rows = selected.localCheckpoint()
-    val prev = spark.conf.getOption(
-      "spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      rows.repartitionByRange(col("time_chunk"), col("frac_num"))
-        .sortWithinPartitions(col("time_chunk"), col("frac_num"))
-        .write.mode("overwrite").partitionBy("time_chunk")
-        .parquet(dataPath(root))
-    } finally {
-      // unpersist in the finally: a failed rewrite must not pin the
-      // checkpointed batch on executors for the session's lifetime
-      rows.unpersist()
-      prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    replaceTimeChunks(root, selected)
     (before, countFiles())
   }
 
@@ -173,42 +193,93 @@ object FractionStore {
 
   /** Chunk a pixel-level DataFrame (x, y, t, value) into fraction rows —
     * the write_all path (jgrid3.py:441-457). Pixels absent from `pixels`
-    * get the header's nodata value.
+    * get the header's nodata value; a pixel outside the grid fails the
+    * job with an error naming the pixel and the grid size.
     *
-    * One shuffle (groupByKey on the chunk key); the dense C-order scatter
-    * inside a chunk is per-group imperative logic (a fraction fits memory
-    * by construction — the reference sizes chunks to an HDFS block), done
-    * in `mapGroups`. Everything before/after stays relational.
+    * `stored` (fraction rows of an existing store, packed) are chunks to
+    * GROW rather than build: the incremental append's ragged tail
+    * (complete_ndvi_worldgrid.py:59-142). Each is cogrouped with the new
+    * pixels of its key and spliced — its old series copied per pixel
+    * into the grown `w*h*nd` chunk, the new pixels scattered in, one
+    * encode — so a stored chunk crosses the shuffle as ONE packed row,
+    * never as pixels. A stored chunk that receives no pixel still grows
+    * (with nodata) to the header's chunk geometry.
+    *
+    * One shuffle on the chunk key; the dense C-order scatter inside a
+    * chunk is per-group imperative logic (a fraction fits memory by
+    * construction — the reference sizes chunks to an HDFS block).
+    * Everything before/after stays relational.
     */
-  def fromPixels(spark: SparkSession, header: GridHeader, pixels: DataFrame): DataFrame = {
+  def fromPixels(spark: SparkSession, header: GridHeader, pixels: DataFrame,
+                 stored: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
     val g = header.chunkGrid
-    val dtype = header.dtype
-    val keyed = pixels.select(
-      (col("x") / g.fracWidth).cast("int").as("frac_x"),
-      (col("y") / g.fracHeight).cast("int").as("frac_y"),
-      (col("t") / g.fracNDates).cast("int").as("time_chunk"),
-      col("x"), col("y"), col("t"), col("value").cast("double").as("value"))
-      .as[(Int, Int, Int, Int, Int, Int, Double)]
-    val rows = keyed
-      .groupByKey(r => (r._1, r._2, r._3))
-      .mapGroups { (key: (Int, Int, Int),
-                    it: Iterator[(Int, Int, Int, Int, Int, Int, Double)]) =>
-        val (fx, fy, tc) = key
-        val x0 = fx * g.fracWidth
-        val y0 = fy * g.fracHeight
-        val t0 = tc * g.fracNDates
-        val w = math.min(g.fracWidth, header.width - x0)
-        val h = math.min(g.fracHeight, header.height - y0)
-        val nd = math.min(g.fracNDates, header.nDates - t0)
-        val data = Array.fill(w * h * nd)(header.nodata)
-        it.foreach { case (_, _, _, x, y, t, v) =>
-          data(((y - y0) * w + (x - x0)) * nd + (t - t0)) = v
+    val byChunk = pixels
+      .select(col("x"), col("y"), col("t"), col("value").cast("double"))
+      .as[(Int, Int, Int, Double)]
+      .groupByKey { case (x, y, t, _) => chunkKey(header, g, x, y, t) }
+    val rows = stored match {
+      case None =>
+        byChunk.mapGroups((key, it) => chunk(header, g, key, None, it))
+      case Some(s) =>
+        byChunk.cogroup(
+          s.as[FracRowBytes].groupByKey(r => (r.frac_num, r.time_chunk))) {
+          (key, it, old) =>
+            val base = old.toList
+            require(base.size <= 1,
+              s"store holds ${base.size} rows for chunk $key, expected one")
+            Iterator(chunk(header, g, key, base.headOption, it))
         }
-        FracRowBytes(fy * g.numFracsX + fx, tc, fx, fy, x0, y0, t0, w, h, nd,
-          PayloadCodec.encodeDouble(data, dtype))
-      }
+    }
     rows.toDF()
+  }
+
+  /** Chunk key (frac_num, time_chunk) of pixel (x, y, t). Every pixel
+    * that reaches [[chunk]]'s scatter passes here first, so this is
+    * where an out-of-grid pixel is rejected: the scatter's index
+    * arithmetic would otherwise land it silently in a neighbouring
+    * pixel of the chunk. */
+  private def chunkKey(header: GridHeader, g: ChunkGrid,
+                       x: Int, y: Int, t: Int): (Int, Int) = {
+    if (!g.inBoundsXY(x, y) || t < 0 || t >= header.nDates)
+      throw new IllegalArgumentException(
+        s"pixel (x=$x, y=$y, t=$t) lies outside grid '${header.name}' of " +
+          s"${header.width} x ${header.height} px and ${header.nDates} dates")
+    (g.fracForXY(x, y), t / g.fracNDates)
+  }
+
+  /** One chunk of `header`'s grid: allocated at the header's chunk
+    * geometry and filled with nodata, `base`'s stored series copied in
+    * as each pixel's leading dates, then `pixels` (absolute x, y, t)
+    * scattered in C-order `[y][x][t]`, and the payload encoded once. */
+  private def chunk(header: GridHeader, g: ChunkGrid, key: (Int, Int),
+                    base: Option[FracRowBytes],
+                    pixels: Iterator[(Int, Int, Int, Double)]): FracRowBytes = {
+    val (fracNum, tc) = key
+    val (fx, fy) = (g.fracX(fracNum), g.fracY(fracNum))
+    val x0 = fx * g.fracWidth
+    val y0 = fy * g.fracHeight
+    val t0 = tc * g.fracNDates
+    val w = math.min(g.fracWidth, header.width - x0)
+    val h = math.min(g.fracHeight, header.height - y0)
+    val nd = math.min(g.fracNDates, header.nDates - t0)
+    val data = Array.fill(w * h * nd)(header.nodata)
+    base.foreach { b =>
+      require(b.w == w && b.h == h && b.t0 == t0 && b.nd <= nd,
+        s"stored chunk $key is ${b.w} x ${b.h} x ${b.nd} at t0=${b.t0}; " +
+          s"it cannot grow to $w x $h x $nd at t0=$t0")
+      val old = PayloadCodec.decodeDouble(b.data, PayloadCodec.code(header.dtype))
+      var p = 0
+      while (p < w * h) {
+        System.arraycopy(old, p * b.nd, data, p * nd, b.nd)
+        p += 1
+      }
+    }
+    pixels.foreach { case (x, y, t, v) =>
+      data(((y - y0) * w + (x - x0)) * nd + (t - t0)) = v
+    }
+    FracRowBytes(fracNum, tc, fx, fy, x0, y0, t0, w, h, nd,
+      PayloadCodec.encodeDouble(data, header.dtype))
   }
 
   // ---- read (SRC1/SRC3, P1-P3, P6-P7) ---------------------------------

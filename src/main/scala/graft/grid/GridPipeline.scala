@@ -1,6 +1,6 @@
 package graft.grid
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -13,6 +13,13 @@ import org.apache.spark.sql.types._
   *  - todo = available − already-written output chunks unless forceAll
   *    (J5 lazy resume, :171-177) — re-running a finished pipeline is a
   *    no-op (idempotence);
+  *  - beyond the reference: an output chunk whose `nd` differs from its
+  *    input chunk's is STALE (an [[IncrementalAppend]] grew the input's
+  *    tail after the chunk was derived). Every available chunk of a
+  *    time chunk holding a stale one is recomputed, and those
+  *    `time_chunk` partitions are replaced
+  *    ([[FractionStore.replaceTimeChunks]]); missing chunks elsewhere
+  *    are appended as before;
   *  - the user function maps N aligned input chunks to one output chunk.
   *
   * What Spark replaces: egg shipping, WebHDFS reads, write-in-mapper,
@@ -38,13 +45,6 @@ final class GridPipeline(
   require(output.sameGeogrid(inputs.head._1),
     "output grid must share the inputs' geogrid")
 
-  private val key = Seq("frac_num", "time_chunk")
-
-  /** Chunk keys already present in the output (done set); empty when the
-    * output store does not exist yet. */
-  def doneKeys(spark: SparkSession): DataFrame =
-    GridPipeline.doneKeysFor(spark, outputRoot)
-
   /** Run `fn` over every todo chunk. `fn` receives the chunk key and the
     * aligned input payloads (as doubles, in `inputs` order) and returns
     * the output payload (length w*h*nd of the output dtype's chunk).
@@ -53,11 +53,12 @@ final class GridPipeline(
       fn: (FracRow, Seq[Array[Double]]) => Array[Double]): Long = {
     import spark.implicits._
 
-    // J4: available = ∩ inputs, J5: − done
+    // J4: available = ∩ inputs, J5: − done (stale time chunks are not done)
     val available = GridPipeline.availableKeys(spark, inputs)
-    val todo =
-      if (forceAll) available
-      else available.join(doneKeys(spark), key, "left_anti")
+    val done =
+      if (forceAll) None else GridPipeline.outputChunks(spark, outputRoot)
+    val stale = GridPipeline.staleTimeChunks(available, done.toSeq)
+    val todo = GridPipeline.todo(available, done.toSeq, stale)
 
     val padded = GridPipeline.alignedPadded(spark, inputs, todo)
     val inCodes = inputs.map(p => PayloadCodec.code(p._1.dtype))
@@ -84,15 +85,8 @@ final class GridPipeline(
     outDf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = outDf.count()
-      if (n > 0) {
-        // incremental runs append new chunks; forceAll rewrites the store
-        // (reference overwrites fraction files in place)
-        outDf.repartitionByRange(col("time_chunk"), col("frac_num"))
-          .sortWithinPartitions(col("frac_num"))
-          .write.mode(if (forceAll) "overwrite" else "append")
-          .partitionBy("time_chunk")
-          .parquet(FractionStore.dataPath(outputRoot))
-      }
+      if (n > 0) GridPipeline.writeOutput(outDf, outputRoot,
+        forceAll, stale, None)
       n
     } finally outDf.unpersist()
   }
@@ -111,23 +105,77 @@ object GridPipeline {
     if (root.startsWith("table:")) spark.table(root.stripPrefix("table:"))
     else FractionStore.fractions(spark, root)
 
-  private[grid] def doneKeysFor(spark: SparkSession, root: String): DataFrame = {
+  /** Chunks already present in an output store (frac_num, time_chunk,
+    * nd) — its done set; None when the store does not exist yet, so a
+    * first run plans no scan of it. */
+  private[grid] def outputChunks(spark: SparkSession,
+                                 root: String): Option[DataFrame] = {
     val path = new org.apache.hadoop.fs.Path(FractionStore.dataPath(root))
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(path))
-      FractionStore.fractions(spark, root)
-        .select(col("frac_num"), col("time_chunk")).distinct()
-    else {
-      import spark.implicits._
-      Seq.empty[(Int, Int)].toDF("frac_num", "time_chunk")
-    }
+      Some(FractionStore.fractions(spark, root)
+        .select(col("frac_num"), col("time_chunk"), col("nd")).distinct())
+    else None
   }
 
+  /** Available chunks (frac_num, time_chunk, nd): the intersection of
+    * the inputs' chunk sets, with `nd` taken from the first input — the
+    * input that [[alignedPadded]] takes chunk placement from. */
   private[grid] def availableKeys(spark: SparkSession,
                                   inputs: Seq[(GridHeader, String)]): DataFrame =
-    inputs.map { case (_, root) =>
-      chunkRows(spark, root).select(key.map(col): _*).distinct()
+    inputs.zipWithIndex.map { case ((_, root), i) =>
+      chunkRows(spark, root)
+        .select((if (i == 0) key :+ "nd" else key).map(col): _*).distinct()
     }.reduce((a, b) => a.join(b, key, "left_semi"))
+
+  /** Time chunks in which some output store holds a chunk whose `nd`
+    * differs from the available input chunk's — derived before an
+    * append grew the input's tail. Runs a job only when an output
+    * store exists. */
+  private[grid] def staleTimeChunks(available: DataFrame,
+                                    done: Seq[DataFrame]): Seq[Int] =
+    done.flatMap { d =>
+      available.join(d.withColumnRenamed("nd", "done_nd"), key)
+        .filter(col("nd") =!= col("done_nd"))
+        .select(col("time_chunk")).distinct()
+        .collect().map(_.getInt(0))
+    }.distinct.sorted
+
+  private def inTimeChunks(cs: Seq[Int]): Column =
+    col("time_chunk").isin(cs.map(Integer.valueOf): _*)
+
+  /** Lazy-resume todo: available minus the chunks done in EVERY output
+    * store of `done`, where no chunk of a stale time chunk counts as
+    * done. Empty `done` (forceAll, or an output store that does not
+    * exist yet) leaves every available chunk todo. */
+  private[grid] def todo(available: DataFrame, done: Seq[DataFrame],
+                         stale: Seq[Int]): DataFrame =
+    if (done.isEmpty) available
+    else available.join(
+      done.map(_.select(key.map(col): _*))
+        .reduce((a, b) => a.join(b, key, "left_semi"))
+        .filter(!inTimeChunks(stale)),
+      key, "left_anti")
+
+  /** Write computed chunks to one output store. forceAll rewrites the
+    * store (the reference overwrites fraction files in place); a lazy
+    * run replaces the stale time chunks' partitions and appends the
+    * rest, minus the chunks `done` (this store's done set) already
+    * holds. */
+  private[grid] def writeOutput(rows: DataFrame, root: String,
+                                forceAll: Boolean, stale: Seq[Int],
+                                done: Option[DataFrame]): Unit = {
+    if (forceAll) FractionStore.writeRows(rows, root, "overwrite")
+    else {
+      if (stale.nonEmpty)
+        FractionStore.replaceTimeChunks(root,
+          rows.filter(inTimeChunks(stale)))
+      val fresh = rows.filter(!inTimeChunks(stale))
+      FractionStore.writeRows(done.fold(fresh)(d =>
+        fresh.join(d.select(key.map(col): _*), key, "left_anti")),
+        root, "append")
+    }
+  }
 
   /** Align input chunks on the chunk key and pad to the fixed
     * AlignedChunk shape. Inputs share chunking, so the join keys are
@@ -167,7 +215,8 @@ object GridPipeline {
   * Same resume semantics as the single-output pipeline, per store: todo
   * is available − (chunks present in EVERY output), and each store's
   * write anti-joins its own done set, so a run that died between store
-  * writes backfills only what is missing where.
+  * writes backfills only what is missing where. A time chunk stale in
+  * any store is recomputed whole and replaced in every store.
   */
 final class GridMultiPipeline(
     val inputs: Seq[(GridHeader, String)],
@@ -182,8 +231,6 @@ final class GridMultiPipeline(
   require(outputs.forall(_._1.sameGeogrid(inputs.head._1)),
     "output grids must share the inputs' geogrid")
 
-  private val key = Seq("frac_num", "time_chunk")
-
   /** Run `fn` over every todo chunk; it returns one payload per output
     * grid (in `outputs` order). Returns the number of chunks computed. */
   def run(spark: SparkSession)(
@@ -191,18 +238,21 @@ final class GridMultiPipeline(
     import spark.implicits._
 
     // materialize each store's done set BEFORE any write so the write
-    // loop never plans a scan of a directory it is appending to
-    val perOutputDone = outputs.map { case (_, root) =>
-      val d = GridPipeline.doneKeysFor(spark, root)
-      d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      d.count()
-      d
-    }
+    // loop never plans a scan of a directory it is writing to
+    val perOutputDone =
+      if (forceAll) outputs.map(_ => None)
+      else outputs.map { case (_, root) =>
+        GridPipeline.outputChunks(spark, root).map { d =>
+          d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          d.count()
+          d
+        }
+      }
     val available = GridPipeline.availableKeys(spark, inputs)
-    val doneEverywhere = perOutputDone.reduce((a, b) => a.join(b, key, "left_semi"))
-    val todo =
-      if (forceAll) available
-      else available.join(doneEverywhere, key, "left_anti")
+    val stale = GridPipeline.staleTimeChunks(available, perOutputDone.flatten)
+    val todo = GridPipeline.todo(available,
+      if (perOutputDone.forall(_.isDefined)) perOutputDone.flatten else Nil,
+      stale)
 
     val padded = GridPipeline.alignedPadded(spark, inputs, todo)
     val inCodes = inputs.map(p => PayloadCodec.code(p._1.dtype))
@@ -237,19 +287,13 @@ final class GridMultiPipeline(
         val one = outDf.select(col("frac_num"), col("time_chunk"),
           col("frac_x"), col("frac_y"), col("x0"), col("y0"), col("t0"),
           col("w"), col("h"), col("nd"), col(s"data_$i").as("data"))
-        val fresh =
-          if (forceAll) one
-          else one.join(perOutputDone(i), key, "left_anti")
-        fresh.repartitionByRange(col("time_chunk"), col("frac_num"))
-          .sortWithinPartitions(col("frac_num"))
-          .write.mode(if (forceAll) "overwrite" else "append")
-          .partitionBy("time_chunk")
-          .parquet(FractionStore.dataPath(root))
+        GridPipeline.writeOutput(one, root, forceAll, stale,
+          perOutputDone(i))
       }
       n
     } finally {
       outDf.unpersist()
-      perOutputDone.foreach(_.unpersist())
+      perOutputDone.flatten.foreach(_.unpersist())
     }
   }
 }

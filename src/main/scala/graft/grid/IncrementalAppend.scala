@@ -16,10 +16,19 @@ import org.apache.spark.sql.functions._
   *  - the header's timestamps are the authoritative axis (dates CSV
   *    analog), extended atomically with the data write.
   *
-  * Scale: the rewrite touches only time chunks >= floor(n0/fracNDates) —
-  * dynamic partition overwrite on the time_chunk partition column; all
-  * earlier chunks are untouched. The heavy work (re-chunking) is one
-  * shuffle of the affected window.
+  * Scale: the rewrite touches only time chunks >= c0 = floor(n0 /
+  * fracNDates) — dynamic partition overwrite on the time_chunk
+  * partition column ([[FractionStore.replaceTimeChunks]]); all earlier
+  * chunks are untouched. The ragged tail chunk c0 is spliced, not
+  * re-chunked: its stored rows stay packed and are cogrouped on
+  * (frac_num, time_chunk) with the new pixels, and each grown chunk
+  * copies its pixels' old series and scatters the new values in
+  * ([[FractionStore.fromPixels]] with `stored`). The chunking shuffle
+  * thus carries the new pixels plus at most one packed row per tail
+  * chunk — it grows with the dates appended, not with the tail's
+  * length. When
+  * n0 is a multiple of fracNDates there is no tail to grow and the new
+  * pixels are chunked on their own.
   */
 object IncrementalAppend {
 
@@ -39,7 +48,6 @@ object IncrementalAppend {
 
     val n0 = h0.nDates
     val h1 = h0.copy(timestampsMs = h0.timestampsMs ++ keepIdx.map(_._1))
-    val g1 = h1.chunkGrid
 
     // remap new pixels' local t -> absolute t, dropping skipped dates
     val idxMap = keepIdx.map(_._2).zipWithIndex
@@ -50,42 +58,16 @@ object IncrementalAppend {
       .withColumn("t", element_at(mapExpr, col("t").cast("int")))
       .filter(col("t").isNotNull)
 
-    // affected chunk range: the (possibly ragged) tail chunk onward
+    // the ragged tail chunk (if any) is grown in place from its packed rows
     val c0 = n0 / h1.fracNDates
-    val tailStart = c0 * h1.fracNDates
-    val oldTail =
-      if (tailStart < n0)
-        FractionStore.pixels(h0,
-          FractionStore.fractions(spark, root)
-            .filter(col("time_chunk") >= c0), maskNodata = false)
-          .filter(col("t") >= tailStart)
-      else spark.emptyDataFrame
-        .withColumn("x", lit(0)).withColumn("y", lit(0))
-        .withColumn("t", lit(0)).withColumn("value", lit(0.0))
-        .limit(0).select(col("x"), col("y"), col("t"), col("value"))
-    val window = oldTail
-      .select(col("x"), col("y"), col("t"), col("value").cast("double"))
-      .union(newAbs.select(col("x"), col("y"), col("t"),
-        col("value").cast("double")))
-
-    // localCheckpoint: the rewrite READS the tail partitions it is about
-    // to overwrite — materialize before the destructive write so no task
-    // can recompute against deleted files
-    val rows = FractionStore.fromPixels(spark, h1, window).localCheckpoint()
-    // dynamic partition overwrite: replace ONLY the affected time chunks
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      rows.repartitionByRange(col("time_chunk"), col("frac_num"))
-        .sortWithinPartitions(col("frac_num"))
-        .write.mode("overwrite").partitionBy("time_chunk")
-        .parquet(FractionStore.dataPath(root))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    val tail =
+      if (n0 % h1.fracNDates == 0) None
+      else Some(FractionStore.fractions(spark, root)
+        .filter(col("time_chunk") === c0))
+    // the rewrite READS the tail partition it overwrites; the helper
+    // materializes the rows before the destructive write
+    FractionStore.replaceTimeChunks(root,
+      FractionStore.fromPixels(spark, h1, newAbs, tail))
     h1.save(spark, root)
     h1
   }

@@ -392,20 +392,6 @@ object Ingest {
       .filter(col("time_chunk") === timeChunk && col("frac_num") =!= fracNum)
     val rebuilt = FractionStore.fromPixels(spark, header, replacementPixels)
       .filter(col("time_chunk") === timeChunk && col("frac_num") === fracNum)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      // materialize before overwriting the partition being read
-      keep.unionByName(rebuilt).localCheckpoint()
-        .repartitionByRange(col("time_chunk"), col("frac_num"))
-        .sortWithinPartitions(col("frac_num"))
-        .write.mode("overwrite").partitionBy("time_chunk")
-        .parquet(FractionStore.dataPath(root))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    FractionStore.replaceTimeChunks(root, keep.unionByName(rebuilt))
   }
 }

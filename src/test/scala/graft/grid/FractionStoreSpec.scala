@@ -150,4 +150,25 @@ class FractionStoreSpec extends AnyFunSuite {
     val ts = withTs.select("ts_ms").distinct().collect().map(_.getLong(0)).sorted
     assert(ts.toSeq == header.timestampsMs)
   }
+
+  test("fromPixels rejects a pixel outside the grid, naming it") {
+    // 25 px wide, 10 px fractions: the last fraction column is 5 px wide,
+    // so x = 27 keys to it and would index past its rows; x = -1 keys to
+    // fraction 0 and would land in the previous pixel row
+    val h = GridHeader(name = "edge", width = 25, height = 10,
+      fracWidth = 10, fracHeight = 10, fracNDates = 2, dtype = "int16",
+      srs = "wgs84", geot = Seq(0.0, 1.0, 0.0, 0.0, 0.0, -1.0),
+      timestampsMs = Seq(1L, 2L), nodata = -1.0)
+    import spark.implicits._
+    for ((x, y) <- Seq((27, 3), (-1, 3), (3, 10))) {
+      val px = Seq((x, y, 0, 7.0), (0, 0, 0, 1.0)).toDF("x", "y", "t", "value")
+      val err = intercept[Exception] {
+        FractionStore.fromPixels(spark, h, px).collect()
+      }
+      val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+        .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).toSeq
+      assert(msgs.exists(m => m.contains(s"pixel (x=$x, y=$y, t=0)") &&
+        m.contains("25 x 10 px")), msgs.mkString("\n"))
+    }
+  }
 }

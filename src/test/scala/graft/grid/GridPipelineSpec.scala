@@ -166,4 +166,58 @@ class GridPipelineSpec extends AnyFunSuite {
     val p2 = new GridPipeline(Seq((ndviH, ndviRoot)), outH, outRoot, forceAll = true)
     assert(p2.run(spark)((_, ps) => ps.head) == 32)
   }
+
+  test("lazy resume after an append recomputes the stale tail chunks") {
+    // 3 dates in chunks of 2: the tail chunk 1 holds one date; appending
+    // 2 dates grows it to 2 and opens chunk 2
+    val ts = (0 until 5).map(i => 5000L + i)
+    def header(name: String, n: Int) = SyntheticGrid.miniModisNdviHeader
+      .copy(name = name, timestampsMs = ts.take(n))
+    val ndvi = TestSpark.tmpDir("stale_ndvi")
+    val qa = TestSpark.tmpDir("stale_qa")
+    for ((root, value, dtype) <- Seq(
+        (ndvi, SyntheticGrid.ndviValue _, "int16"),
+        (qa, SyntheticGrid.qaValue _, "uint16"))) {
+      val h = header("in", 3).copy(dtype = dtype)
+      FractionStore.write(spark, h, FractionStore.fromPixels(spark, h,
+        SyntheticGrid.pixelDf(spark, h, value)), root)
+    }
+    def ins = Seq(ndvi, qa).map(r => (GridHeader.load(spark, r), r))
+    val kernel: (FracRow, Seq[Array[Double]]) => Array[Double] =
+      (_, ps) => ps.head.zip(ps(1)).map { case (n, q) =>
+        if ((q.toInt & 3) == 3) -3000.0 else n }
+    def single(root: String, force: Boolean = false) =
+      new GridPipeline(ins, header("out", ins.head._1.nDates), root, force)
+        .run(spark)(kernel)
+    def multi(a: String, b: String) = new GridMultiPipeline(ins,
+      Seq((header("out", ins.head._1.nDates), a),
+        (header("neg", ins.head._1.nDates), b)))
+      .run(spark)((r, ps) => { val k = kernel(r, ps); Seq(k, k.map(-_)) })
+
+    val (lazyOut, multiA, multiB) = (TestSpark.tmpDir("stale_out"),
+      TestSpark.tmpDir("stale_ma"), TestSpark.tmpDir("stale_mb"))
+    assert(single(lazyOut) == 32)
+    assert(multi(multiA, multiB) == 32)
+
+    for ((root, value) <- Seq((ndvi, SyntheticGrid.ndviValue _),
+        (qa, SyntheticGrid.qaValue _))) {
+      val h = GridHeader.load(spark, root)
+      IncrementalAppend.appendDates(spark, root, ts.drop(3),
+        SyntheticGrid.pixelDf(spark, h.copy(timestampsMs = Seq(0L, 1L)),
+          (x, y, t) => value(x, y, t + lit(3))))
+    }
+    // 16 stale chunks of time chunk 1 + 16 new chunks of time chunk 2
+    assert(single(lazyOut) == 32)
+    assert(multi(multiA, multiB) == 32)
+    // ...and then nothing is stale any more
+    assert(single(lazyOut) == 0)
+    assert(multi(multiA, multiB) == 0)
+
+    val fresh = TestSpark.tmpDir("stale_fresh")
+    assert(single(fresh, force = true) == 48)
+    val want = ChunkRows(spark, fresh)
+    assert(ChunkRows(spark, lazyOut) == want)
+    assert(ChunkRows(spark, multiA) == want)
+    assert(ChunkRows(spark, multiB).keySet == want.keySet)
+  }
 }
