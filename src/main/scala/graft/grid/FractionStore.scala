@@ -257,12 +257,10 @@ object FractionStore {
                     pixels: Iterator[(Int, Int, Int, Double)]): FracRowBytes = {
     val (fracNum, tc) = key
     val (fx, fy) = (g.fracX(fracNum), g.fracY(fracNum))
-    val x0 = fx * g.fracWidth
-    val y0 = fy * g.fracHeight
-    val t0 = tc * g.fracNDates
-    val w = math.min(g.fracWidth, header.width - x0)
-    val h = math.min(g.fracHeight, header.height - y0)
-    val nd = math.min(g.fracNDates, header.nDates - t0)
+    val (x0, x1) = g.fracXRange(fx)
+    val (y0, y1) = g.fracYRange(fy)
+    val (t0, t1) = g.timeChunkRange(tc)
+    val (w, h, nd) = (x1 - x0, y1 - y0, t1 - t0)
     val data = Array.fill(w * h * nd)(header.nodata)
     base.foreach { b =>
       require(b.w == w && b.h == h && b.t0 == t0 && b.nd <= nd,

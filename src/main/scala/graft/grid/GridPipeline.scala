@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The distributed map-over-fractions pipeline (reference: U1, the
-  * engine's centerpiece — rastercube/hadoop/spark.py:105-256).
+  * engine's centerpiece — rastercube/hadoop/spark.py:105-256): the
+  * one-output case of [[GridMultiPipeline]], which holds the run.
   *
   * Semantics preserved from the reference:
   *  - all inputs must share a geogrid (spark.py:146-153);
@@ -39,57 +40,17 @@ final class GridPipeline(
     val outputRoot: String,
     val forceAll: Boolean = false) {
 
-  require(inputs.nonEmpty)
-  require(inputs.forall(_._1.sameGeogrid(inputs.head._1)),
-    "all pipeline inputs must share a geogrid (hadoop/spark.py:146-153)")
-  require(output.sameGeogrid(inputs.head._1),
-    "output grid must share the inputs' geogrid")
+  private val multi =
+    new GridMultiPipeline(inputs, Seq((output, outputRoot)), forceAll)
 
   /** Run `fn` over every todo chunk. `fn` receives the chunk key and the
     * aligned input payloads (as doubles, in `inputs` order) and returns
     * the output payload (length w*h*nd of the output dtype's chunk).
+    * Returns the number of chunks computed.
     */
   def run(spark: SparkSession)(
-      fn: (FracRow, Seq[Array[Double]]) => Array[Double]): Long = {
-    import spark.implicits._
-
-    // J4: available = ∩ inputs, J5: − done (stale time chunks are not done)
-    val available = GridPipeline.availableKeys(spark, inputs)
-    val done =
-      if (forceAll) None else GridPipeline.outputChunks(spark, outputRoot)
-    val stale = GridPipeline.staleTimeChunks(available, done.toSeq)
-    val todo = GridPipeline.todo(available, done.toSeq, stale)
-
-    val padded = GridPipeline.alignedPadded(spark, inputs, todo)
-    val inCodes = inputs.map(p => PayloadCodec.code(p._1.dtype))
-    val outDtype = output.dtype
-    val outRows = padded
-      .as[AlignedChunk]
-      .map { c =>
-        val row = FracRow(c.frac_num, c.time_chunk, c.frac_x, c.frac_y,
-          c.x0, c.y0, c.t0, c.w, c.h, c.nd, null)
-        val payloads = c.payloads.zip(inCodes).map { case (b, cd) =>
-          PayloadCodec.decodeDouble(b, cd)
-        }
-        FracRowBytes(c.frac_num, c.time_chunk, c.frac_x, c.frac_y,
-          c.x0, c.y0, c.t0, c.w, c.h, c.nd,
-          PayloadCodec.encodeDouble(fn(row, payloads), outDtype))
-      }
-
-    val outDf = outRows.toDF()
-
-    output.save(spark, outputRoot)
-    // persist so the count action and the write share one execution (the
-    // reference avoids double work by writing inside the mapper and
-    // returning only filenames — spark.py:199-205)
-    outDf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = outDf.count()
-      if (n > 0) GridPipeline.writeOutput(outDf, outputRoot,
-        forceAll, stale, None)
-      n
-    } finally outDf.unpersist()
-  }
+      fn: (FracRow, Seq[Array[Double]]) => Array[Double]): Long =
+    multi.run(spark)((row, payloads) => Seq(fn(row, payloads)))
 }
 
 object GridPipeline {
@@ -204,19 +165,21 @@ object GridPipeline {
   }
 }
 
-/** One aligned pass, SEVERAL derived grids: the multi-output form of
-  * [[GridPipeline]]. The reference derives one output per job, so a
-  * product that needs k derived layers from the same inputs re-reads
-  * and re-joins them k times; here the kernel returns k payloads per
-  * chunk and each goes to its own store — inputs are scanned, joined,
-  * and decoded ONCE regardless of k (at 100 TB the input scan dominates,
-  * so k outputs cost ~1 input pass + k cheap writes).
+/** One aligned pass, SEVERAL derived grids: the pipeline run, for k
+  * output grids ([[GridPipeline]] is its k = 1 case). The reference
+  * derives one output per job, so a product that needs k derived
+  * layers from the same inputs re-reads and re-joins them k times;
+  * here the kernel returns k payloads per chunk and each goes to its
+  * own store — inputs are scanned, joined, and decoded ONCE regardless
+  * of k (at 100 TB the input scan dominates, so k outputs cost ~1 input
+  * pass + k cheap writes).
   *
-  * Same resume semantics as the single-output pipeline, per store: todo
-  * is available − (chunks present in EVERY output), and each store's
-  * write anti-joins its own done set, so a run that died between store
-  * writes backfills only what is missing where. A time chunk stale in
-  * any store is recomputed whole and replaced in every store.
+  * Resume semantics per store: todo is available − (chunks present in
+  * EVERY output), and with several stores each store's write anti-joins
+  * its own done set, so a run that died between store writes backfills
+  * only what is missing where. A time chunk stale in any store is
+  * recomputed whole and replaced in every store. A `forceAll` run, and
+  * a first run on absent stores, plans no scan of any output.
   */
 final class GridMultiPipeline(
     val inputs: Seq[(GridHeader, String)],
@@ -227,7 +190,7 @@ final class GridMultiPipeline(
   require(outputs.nonEmpty && outputs.size <= 4,
     "1 to 4 output grids (AlignedChunk payload shape)")
   require(inputs.forall(_._1.sameGeogrid(inputs.head._1)),
-    "all pipeline inputs must share a geogrid")
+    "all pipeline inputs must share a geogrid (hadoop/spark.py:146-153)")
   require(outputs.forall(_._1.sameGeogrid(inputs.head._1)),
     "output grids must share the inputs' geogrid")
 
@@ -237,17 +200,19 @@ final class GridMultiPipeline(
       fn: (FracRow, Seq[Array[Double]]) => Seq[Array[Double]]): Long = {
     import spark.implicits._
 
-    // materialize each store's done set BEFORE any write so the write
-    // loop never plans a scan of a directory it is writing to
-    val perOutputDone =
-      if (forceAll) outputs.map(_ => None)
-      else outputs.map { case (_, root) =>
-        GridPipeline.outputChunks(spark, root).map { d =>
-          d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          d.count()
-          d
-        }
-      }
+    // J4: available = ∩ inputs, J5: − done (stale time chunks are not done)
+    val perOutputDone = outputs.map { case (_, root) =>
+      if (forceAll) None else GridPipeline.outputChunks(spark, root)
+    }
+    // with several stores each write anti-joins its own done set, so
+    // materialize them BEFORE any write: the write loop must never plan
+    // a scan of a directory it is writing to. A lone store's done set is
+    // already out of todo; its write needs none.
+    val writeDone = perOutputDone.map(d => if (outputs.size > 1) d else None)
+    writeDone.flatten.foreach { d =>
+      d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      d.count()
+    }
     val available = GridPipeline.availableKeys(spark, inputs)
     val stale = GridPipeline.staleTimeChunks(available, perOutputDone.flatten)
     val todo = GridPipeline.todo(available,
@@ -279,7 +244,9 @@ final class GridMultiPipeline(
 
     val outDf = outRows.toDF()
     outputs.foreach { case (h, root) => h.save(spark, root) }
-    // one kernel execution feeds every store write + the count
+    // persist so the count action and every store write share one
+    // kernel execution (the reference avoids double work by writing
+    // inside the mapper and returning only filenames — spark.py:199-205)
     outDf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = outDf.count()
@@ -287,13 +254,12 @@ final class GridMultiPipeline(
         val one = outDf.select(col("frac_num"), col("time_chunk"),
           col("frac_x"), col("frac_y"), col("x0"), col("y0"), col("t0"),
           col("w"), col("h"), col("nd"), col(s"data_$i").as("data"))
-        GridPipeline.writeOutput(one, root, forceAll, stale,
-          perOutputDone(i))
+        GridPipeline.writeOutput(one, root, forceAll, stale, writeDone(i))
       }
       n
     } finally {
       outDf.unpersist()
-      perOutputDone.flatten.foreach(_.unpersist())
+      writeDone.flatten.foreach(_.unpersist())
     }
   }
 }

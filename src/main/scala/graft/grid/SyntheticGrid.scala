@@ -1,6 +1,6 @@
 package graft.grid
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic synthetic grid fixtures (FIXTURES.md §2 — the stand-in
@@ -87,6 +87,15 @@ object SyntheticGrid {
     */
   def writeDirect(spark: SparkSession, h: GridHeader, root: String,
                   value: PixelFn): GridHeader = {
+    FractionStore.writePrepartitioned(spark, h,
+      directRows(spark, h, value).toDF(), root)
+    h
+  }
+
+  /** Every chunk row of `h`'s grid, payloads from `value`: the rows
+    * [[writeDirect]] writes, for callers that time generation alone. */
+  private[graft] def directRows(spark: SparkSession, h: GridHeader,
+                                value: PixelFn): Dataset[FracRowBytes] = {
     import spark.implicits._
     val g = h.chunkGrid
     val nFracs = g.numFracsX * g.numFracsY
@@ -94,15 +103,14 @@ object SyntheticGrid {
     val base = spark.range(nFracs.toLong * g.numTimeChunks)
       .repartition(math.min(spark.sparkContext.defaultParallelism * 4,
         nFracs * g.numTimeChunks))
-    val rows = base.map { id =>
+    base.map { id =>
       val fracNum = (id / g.numTimeChunks).toInt
       val tc = (id % g.numTimeChunks).toInt
       val fx = g.fracX(fracNum); val fy = g.fracY(fracNum)
-      val x0 = fx * h.fracWidth; val y0 = fy * h.fracHeight
-      val t0 = tc * h.fracNDates
-      val w = math.min(h.fracWidth, h.width - x0)
-      val hh = math.min(h.fracHeight, h.height - y0)
-      val nd = math.min(h.fracNDates, h.nDates - t0)
+      val (x0, x1) = g.fracXRange(fx)
+      val (y0, y1) = g.fracYRange(fy)
+      val (t0, t1) = g.timeChunkRange(tc)
+      val (w, hh, nd) = (x1 - x0, y1 - y0, t1 - t0)
       // one dense double pass + one packed encode pass — both
       // memory-bandwidth bound, no boxing (PixelFn is specialized)
       val data = new Array[Double](w * hh * nd)
@@ -120,9 +128,7 @@ object SyntheticGrid {
       }
       FracRowBytes(fracNum, tc, fx, fy, x0, y0, t0, w, hh, nd,
         PayloadCodec.encodeDouble(data, dtype))
-    }.toDF()
-    FractionStore.writePrepartitioned(spark, h, rows, root)
-    h
+    }
   }
 
   /** Scalar pixel function — a dedicated trait (NOT Function3, which is

@@ -144,10 +144,26 @@ object Hdf4 {
     }.toSeq
   }
 
-  /** The dataset whose label contains `name` — the reference's
-    * subdataset selection (modis.py:224-229). */
+  /** The dataset labeled `name` — the reference's subdataset selection
+    * (modis.py:224-229); see [[select]]. */
   def selectByName(bytes: Array[Byte], name: String): Option[Sds] =
-    readSds(bytes).find(_.name.contains(name))
+    select(readSds(bytes), name)
+
+  /** The dataset of `all` whose label is exactly `name`, else the one
+    * dataset whose label contains it; None when no label contains it.
+    * A name contained in several labels (in a MOD13Q1 archive "VI" is
+    * in both "250m 16 days NDVI" and "250m 16 days EVI") is rejected,
+    * naming the candidates. */
+  private[sources] def select(all: Seq[Sds], name: String): Option[Sds] =
+    all.find(_.name == name).orElse {
+      all.filter(_.name.contains(name)) match {
+        case Seq() => None
+        case Seq(one) => Some(one)
+        case many => throw new IllegalArgumentException(
+          s"dataset name '$name' is ambiguous: it matches " +
+            many.map(s => s"'${s.name}'").mkString(", "))
+      }
+    }
 
   /** Inflate one zlib stream of known uncompressed size. */
   private def inflate(src: Array[Byte], off: Int, len: Int,

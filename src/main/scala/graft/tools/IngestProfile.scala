@@ -25,40 +25,10 @@ object IngestProfile {
 
     val h = SyntheticGrid.modisTileHeader("tile_ndvi", "int16", -3000.0)
     val g = h.chunkGrid
-    val nFracs = g.numFracsX * g.numFracsY
-    val dtype = h.dtype
-    println(s"fracs=$nFracs timeChunks=${g.numTimeChunks}")
+    println(s"fracs=${g.numFracsX * g.numFracsY} timeChunks=${g.numTimeChunks}")
 
     // stage 1: generate + encode, no write (force with count of bytes)
-    val base = spark.range(nFracs.toLong * g.numTimeChunks)
-      .repartition(math.min(spark.sparkContext.defaultParallelism * 4,
-        nFracs * g.numTimeChunks))
-    def rows = base.map { id =>
-      val fracNum = (id / g.numTimeChunks).toInt
-      val tc = (id % g.numTimeChunks).toInt
-      val fx = g.fracX(fracNum); val fy = g.fracY(fracNum)
-      val x0 = fx * h.fracWidth; val y0 = fy * h.fracHeight
-      val t0 = tc * h.fracNDates
-      val w = math.min(h.fracWidth, h.width - x0)
-      val hh = math.min(h.fracHeight, h.height - y0)
-      val nd = math.min(h.fracNDates, h.nDates - t0)
-      val data = new Array[Double](w * hh * nd)
-      var i = 0; var ly = 0
-      while (ly < hh) {
-        var lx = 0
-        while (lx < w) {
-          var lt = 0
-          while (lt < nd) {
-            data(i) = SyntheticGrid.ndviScalar(x0 + lx, y0 + ly, t0 + lt)
-            i += 1; lt += 1
-          }
-          lx += 1
-        }
-        ly += 1
-      }
-      FracRowBytes(fracNum, tc, fx, fy, x0, y0, t0, w, hh, nd,
-        PayloadCodec.encodeDouble(data, dtype))
-    }
+    def rows = SyntheticGrid.directRows(spark, h, SyntheticGrid.ndviScalar)
     t("warm generate+encode (count)") { rows.map(_.data.length.toLong).reduce(_ + _) }
     t("generate+encode (count)") { rows.map(_.data.length.toLong).reduce(_ + _) }
 

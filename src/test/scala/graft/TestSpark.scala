@@ -19,6 +19,12 @@ object TestSpark {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** Messages of `err` and its causes: an error raised in a Spark task
+    * reaches the caller wrapped in a SparkException. */
+  def messages(err: Throwable): Seq[String] =
+    Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).toSeq
+
   /** AQE-aware physical-plan traversal shared by the plan-pin specs —
     * adaptive roots, query stages, and reused subqueries all hide their
     * subtrees from `children`, so a naive walk sees an empty tree. One

@@ -49,19 +49,38 @@ class GridPipelineSpec extends AnyFunSuite {
     assert(n == 32)
 
     // verify against the relational formulation of the same mask
-    val got = FractionStore.pixels(outH,
-      FractionStore.fractions(spark, outRoot), maskNodata = false)
-    val ndviPx = FractionStore.pixels(ndviH,
+    assertPixels(outH, outRoot, maskedExpected)
+  }
+
+  /** Pixel view (x, y, t, value) of the input stores joined on the pixel,
+    * with the QA value as `qa` — the relational side of the kernels. */
+  def inputPixels = {
+    val ndviH = GridHeader.load(spark, ndviRoot)
+    val qaH = GridHeader.load(spark, qaRoot)
+    FractionStore.pixels(ndviH,
       FractionStore.fractions(spark, ndviRoot), maskNodata = false)
-    val qaPx = FractionStore.pixels(qaH,
-      FractionStore.fractions(spark, qaRoot), maskNodata = false)
-      .withColumnRenamed("value", "qa")
-    val expected = ndviPx.join(qaPx, Seq("x", "y", "t"))
-      .select(col("x"), col("y"), col("t"),
-        when(QaDecode.modisQaConf(col("qa")) > 0, col("value"))
-          .otherwise(-3000.0).cast("int").as("value"))
-    assert(got.count() == expected.count())
-    assert(got.except(expected).isEmpty && expected.except(got).isEmpty)
+      .join(FractionStore.pixels(qaH,
+        FractionStore.fractions(spark, qaRoot), maskNodata = false)
+        .withColumnRenamed("value", "qa"), Seq("x", "y", "t"))
+  }
+
+  /** NDVI where the QA confidence is positive, else nodata. */
+  def maskedExpected = inputPixels.select(col("x"), col("y"), col("t"),
+    when(QaDecode.modisQaConf(col("qa")) > 0, col("value"))
+      .otherwise(-3000.0).cast("int").as("value"))
+
+  /** QA confidence in percent, stored as uint8 (negative confidences
+    * wrap the way the uint8 payload encoding does). */
+  def confExpected = inputPixels.select(col("x"), col("y"), col("t"),
+    pmod(round(QaDecode.modisQaConf(col("qa")) * 100.0).cast("int"), lit(256))
+      .as("value"))
+
+  def assertPixels(h: GridHeader, root: String,
+                   expected: org.apache.spark.sql.DataFrame): Unit = {
+    val got = FractionStore.pixels(h,
+      FractionStore.fractions(spark, root), maskNodata = false)
+    assert(got.count() == expected.count(), h.name)
+    assert(got.except(expected).isEmpty && expected.except(got).isEmpty, h.name)
   }
 
   test("re-run is a no-op; missing chunks are backfilled (J5 incremental)") {
@@ -87,7 +106,7 @@ class GridPipelineSpec extends AnyFunSuite {
     assert(pipe2.run(spark)(identity) == 0)
   }
 
-  test("multi-output pipeline equals two single-output runs, one pass") {
+  test("multi-output pipeline equals the relational oracle, one pass") {
     val ndviH = GridHeader.load(spark, ndviRoot)
     val qaH = GridHeader.load(spark, qaRoot)
     val ins = Seq((ndviH, ndviRoot), (qaH, qaRoot))
@@ -100,16 +119,8 @@ class GridPipelineSpec extends AnyFunSuite {
     def confKernel(ps: Seq[Array[Double]]): Array[Double] =
       ps(1).map(q => math.round(
         QaDecode.modisQaConfScalar(q.toInt) * 100.0).toDouble)
-
-    // single-output references
-    val refMasked = TestSpark.tmpDir("mm_ref_masked")
-    val refConf = TestSpark.tmpDir("mm_ref_conf")
     val maskedH = ndviH.copy(name = "m_masked")
     val confH = ndviH.copy(name = "m_conf", dtype = "uint8", nodata = 255.0)
-    new GridPipeline(ins, maskedH, refMasked)
-      .run(spark)((_, ps) => maskedKernel(ps))
-    new GridPipeline(ins, confH, refConf)
-      .run(spark)((_, ps) => confKernel(ps))
 
     // one multi-output pass
     val outMasked = TestSpark.tmpDir("mm_multi_masked")
@@ -124,15 +135,9 @@ class GridPipelineSpec extends AnyFunSuite {
     assert(multi.run(spark)((_, ps) =>
       Seq(maskedKernel(ps), confKernel(ps))) == 0)
 
-    Seq((maskedH, refMasked, outMasked), (confH, refConf, outConf)).foreach {
-      case (h, ref, got) =>
-        val a = FractionStore.pixels(h,
-          FractionStore.fractions(spark, ref), maskNodata = false)
-        val b = FractionStore.pixels(h,
-          FractionStore.fractions(spark, got), maskNodata = false)
-        assert(a.count() == b.count())
-        assert(a.except(b).isEmpty && b.except(a).isEmpty, h.name)
-    }
+    // each store against the relational formulation of its kernel
+    assertPixels(maskedH, outMasked, maskedExpected)
+    assertPixels(confH, outConf, confExpected)
 
     // partial-done resume: drop chunks from ONE store only; the rerun
     // backfills just that store's missing chunks
@@ -144,12 +149,7 @@ class GridPipelineSpec extends AnyFunSuite {
       Seq((maskedH, outMasked), (confH, prunedRoot)))
     assert(multi2.run(spark)((_, ps) =>
       Seq(maskedKernel(ps), confKernel(ps))) == 2)
-    val refConfPx = FractionStore.pixels(confH,
-      FractionStore.fractions(spark, refConf), maskNodata = false)
-    val gotConfPx = FractionStore.pixels(confH,
-      FractionStore.fractions(spark, prunedRoot), maskNodata = false)
-    assert(gotConfPx.count() == refConfPx.count())
-    assert(gotConfPx.except(refConfPx).isEmpty)
+    assertPixels(confH, prunedRoot, confExpected)
     // ...and the store that was already complete gained no duplicates
     val maskedChunks = FractionStore.fractions(spark, outMasked)
       .groupBy(col("frac_num"), col("time_chunk")).count()

@@ -103,6 +103,60 @@ class IngestSpec extends AnyFunSuite {
       gap.filter(col("value") =!= -3000).count() == 0)
   }
 
+  test("aligned ingest rejects a blob that does not fit the grid, naming it") {
+    // 25 x 17 px in 7 x 5 fractions (ragged last column 21..24), 23 dates
+    // in chunks of 8 (ragged last chunk 16..22)
+    val h = GridHeader(
+      name = "fit", width = 25, height = 17,
+      fracWidth = 7, fracHeight = 5, fracNDates = 8,
+      dtype = "int16", srs = "wgs84",
+      geot = Seq(0.0, 1.0, 0.0, 0.0, 0.0, -1.0),
+      timestampsMs = (0 until 23).map(_.toLong), nodata = -3000.0)
+    for ((x0, y0, t0, w, hh, nd) <- Seq(
+      (21, 0, 0, 7, 3, 1),  // past the ragged right edge
+      (28, 0, 0, 2, 2, 1),  // past the last fraction column
+      (0, 0, 23, 2, 2, 1),  // past the last date
+      (0, 0, 20, 2, 2, 4),  // reaching past the last date
+      (-1, 0, 0, 2, 2, 1))) { // negative origin
+      val blobDir = TestSpark.tmpDir("npy_unfit")
+      val name = s"${x0}_${y0}_$t0.npy"
+      for ((n, (bw, bh, bnd)) <- Seq(("0_5_0.npy", (3, 3, 2)), (name, (w, hh, nd))))
+        java.nio.file.Files.write(java.nio.file.Paths.get(s"$blobDir/$n"),
+          NpyCodec.write("<i2", Seq(bh, bw, bnd), Array.fill(bw * bh * bnd)(7.0)))
+      val err = intercept[Exception] {
+        Ingest.ingestNpyDirAligned(spark, h, blobDir, TestSpark.tmpDir("npy_unfit_out"))
+      }
+      val msgs = TestSpark.messages(err)
+      assert(msgs.exists(m => m.contains(s"blob '$name'") &&
+        m.contains("outside grid 'fit' of 25 x 17 px and 23 dates")),
+        msgs.mkString("\n"))
+    }
+  }
+
+  test("a blob name that is not <x0>_<y0>_<t0> is rejected, naming the file") {
+    val h = GridHeader(
+      name = "named", width = 10, height = 10,
+      fracWidth = 5, fracHeight = 5, fracNDates = 2,
+      dtype = "int16", srs = "wgs84",
+      geot = Seq(0.0, 1.0, 0.0, 0.0, 0.0, -1.0),
+      timestampsMs = Seq(10L, 20L), nodata = -3000.0)
+    for (name <- Seq("0_0.npy", "a_0_0.npy", "0_0_0_1.npy")) {
+      val blobDir = TestSpark.tmpDir("npy_misnamed")
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$blobDir/$name"),
+        NpyCodec.write("<i2", Seq(2, 2, 1), Array.fill(4)(1.0)))
+      for (ingest <- Seq[(String, String) => Long](
+        Ingest.ingestNpyDirAligned(spark, h, _, _),
+        Ingest.ingestNpyDir(spark, h, _, _))) {
+        val err = intercept[Exception] {
+          ingest(blobDir, TestSpark.tmpDir("npy_misnamed_out"))
+        }
+        val msgs = TestSpark.messages(err)
+        assert(msgs.exists(m => m.contains(s"blob '$name'") &&
+          m.contains("<x0>_<y0>_<t0>.npy")), msgs.mkString("\n"))
+      }
+    }
+  }
+
   test("MODIS file-index parse (SRC5/F2)") {
     import spark.implicits._
     val names = Seq(
@@ -165,17 +219,19 @@ class Hdf4Spec extends AnyFunSuite {
     }
   }
 
-  test("multi-band one-pass ingest equals per-band ingest (deflate archives)") {
-    val base = GridHeader(
-      name = "hdf_multi_ndvi", width = 20, height = 20,
-      fracWidth = 10, fracHeight = 10, fracNDates = 2,
-      dtype = "int16", srs = "wgs84",
-      geot = Seq(0.0, 1.0, 0.0, 0.0, 0.0, -1.0),
-      timestampsMs = Seq(10L, 20L), nodata = -3000.0)
-    val qaH = base.copy(name = "hdf_multi_qa", dtype = "uint16",
-      nodata = 65535.0)
-    def ndvi(x: Int, y: Int, t: Int) = (x * 1000 + y * 10 + t).toDouble
-    def qa(x: Int, y: Int, t: Int) = ((x * 31 + y * 7 + t) % 65536).toDouble
+  /** Two 20 x 20 px, 2-date bands (NDVI int16, QA uint16) in 10 x 10
+    * fractions, landed as two deflate archives of 10 x 20 px each. */
+  val base = GridHeader(
+    name = "hdf_multi_ndvi", width = 20, height = 20,
+    fracWidth = 10, fracHeight = 10, fracNDates = 2,
+    dtype = "int16", srs = "wgs84",
+    geot = Seq(0.0, 1.0, 0.0, 0.0, 0.0, -1.0),
+    timestampsMs = Seq(10L, 20L), nodata = -3000.0)
+  val qaH = base.copy(name = "hdf_multi_qa", dtype = "uint16",
+    nodata = 65535.0)
+  def ndvi(x: Int, y: Int, t: Int) = (x * 1000 + y * 10 + t).toDouble
+  def qa(x: Int, y: Int, t: Int) = ((x * 31 + y * 7 + t) % 65536).toDouble
+  def twoBandLanding(): String = {
     val hdfDir = TestSpark.tmpDir("hdf_multi_blobs")
     for (x0 <- Seq(0, 10)) {
       def plane(f: (Int, Int, Int) => Double) = (for {
@@ -188,22 +244,87 @@ class Hdf4Spec extends AnyFunSuite {
           Hdf4.Sds("250m 16 days VI Quality", Seq(20, 10, 2), "uint16",
             plane(qa))), deflateLevel = 6))
     }
-    // one-pass multi-band vs two per-band passes over the same archives
+    hdfDir
+  }
+
+  test("multi-band one-pass ingest equals each band's generator (deflate)") {
+    val hdfDir = twoBandLanding()
     val (mN, mQ) = (TestSpark.tmpDir("hdf_multi_n"), TestSpark.tmpDir("hdf_multi_q"))
     val counts = Ingest.ingestHdf4DirAlignedMulti(spark, hdfDir,
       Seq((base, "NDVI", mN), (qaH, "VI Quality", mQ)))
     assert(counts == Seq(4L, 4L))
-    val (sN, sQ) = (TestSpark.tmpDir("hdf_single_n"), TestSpark.tmpDir("hdf_single_q"))
-    Ingest.ingestHdf4DirAligned(spark, base, hdfDir, sN, Some("NDVI"))
-    Ingest.ingestHdf4DirAligned(spark, qaH, hdfDir, sQ, Some("VI Quality"))
-    def all(h: GridHeader, r: String) =
-      FractionStore.loadSliceXY(spark, h, r, 0, 20, 0, 20, 0, 2,
-        maskNodata = false).select("x", "y", "t", "value")
-    assert(all(base, mN).except(all(base, sN)).isEmpty &&
-      all(base, sN).except(all(base, mN)).isEmpty)
-    assert(all(qaH, mQ).except(all(qaH, sQ)).isEmpty &&
-      all(qaH, sQ).except(all(qaH, mQ)).isEmpty)
-    assert(all(base, mN).count() == 800)
+    // every chunk row, placement and payload, from the generator alone
+    for ((h, root, f) <- Seq((base, mN, ndvi _), (qaH, mQ, qa _))) {
+      val want = (for (fy <- 0 until 2; fx <- 0 until 2) yield {
+        val values = for {
+          ly <- 0 until 10; lx <- 0 until 10; t <- 0 until 2
+        } yield f(fx * 10 + lx, fy * 10 + ly, t)
+        (fy * 2 + fx, 0) -> (fx * 10, fy * 10, 0, 10, 10, 2,
+          PayloadCodec.encodeDouble(values.toArray, h.dtype).toSeq)
+      }).toMap
+      assert(ChunkRows(spark, root) == want, h.name)
+    }
+  }
+
+  test("aligned ingest leaves no cached blocks, one band or two, written or failed") {
+    val hdfDir = twoBandLanding()
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    // a store root below a plain file cannot be written
+    val unwritable = java.nio.file.Files.createTempFile("not_a_dir", "")
+      .toString + "/store"
+    Ingest.ingestHdf4DirAligned(spark, base, hdfDir,
+      TestSpark.tmpDir("hdf_cache_one"), Some("NDVI"))
+    assert(persisted == before)
+    Ingest.ingestHdf4DirAlignedMulti(spark, hdfDir,
+      Seq((base, "NDVI", TestSpark.tmpDir("hdf_cache_n")),
+        (qaH, "VI Quality", TestSpark.tmpDir("hdf_cache_q"))))
+    assert(persisted == before)
+    intercept[Exception] {
+      Ingest.ingestHdf4DirAligned(spark, base, hdfDir, unwritable, Some("NDVI"))
+    }
+    assert(persisted == before)
+    // the first band's write fills the cache; the second band's throws
+    intercept[Exception] {
+      Ingest.ingestHdf4DirAlignedMulti(spark, hdfDir,
+        Seq((base, "NDVI", TestSpark.tmpDir("hdf_cache_n2")),
+          (qaH, "VI Quality", unwritable)))
+    }
+    assert(persisted == before)
+  }
+
+  test("dataset selection prefers the exact name and rejects an ambiguous one") {
+    def sds(names: String*) = Hdf4.writeSds(names.zipWithIndex.map {
+      case (n, i) => Hdf4.Sds(n, Seq(2, 3), "int16", Array.fill(6)(i.toDouble))
+    })
+    val mod13 = sds("250m 16 days NDVI", "250m 16 days EVI",
+      "250m 16 days VI Quality")
+    // a name contained in exactly one label still selects it
+    assert(Hdf4.selectByName(mod13, "NDVI").get.name == "250m 16 days NDVI")
+    assert(Hdf4.selectByName(mod13, "VI Quality").get.name ==
+      "250m 16 days VI Quality")
+    assert(Hdf4.selectByName(mod13, "EVI").get.name == "250m 16 days EVI")
+    // "VI" is in all three labels: no silent first pick
+    val err = intercept[IllegalArgumentException] {
+      Hdf4.selectByName(mod13, "VI")
+    }
+    assert(Seq("'250m 16 days NDVI'", "'250m 16 days EVI'",
+      "'250m 16 days VI Quality'").forall(err.getMessage.contains),
+      err.getMessage)
+    // an exact label wins over an earlier label that merely contains it
+    val nested = sds("NDVI anomaly", "NDVI")
+    assert(Hdf4.selectByName(nested, "NDVI").get.data.head == 1.0)
+    // the ingest fails the same way, naming the candidates
+    val hdfDir = TestSpark.tmpDir("hdf_ambiguous")
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$hdfDir/0_0_0.hdf"), mod13)
+    val h = base.copy(name = "hdf_ambiguous", timestampsMs = Seq(10L))
+    val ingestErr = intercept[Exception] {
+      Ingest.ingestHdf4DirAligned(spark, h, hdfDir,
+        TestSpark.tmpDir("hdf_ambiguous_out"), Some("VI"))
+    }
+    val msgs = TestSpark.messages(ingestErr)
+    assert(msgs.exists(m => m.contains("'VI' is ambiguous") &&
+      m.contains("'250m 16 days EVI'")), msgs.mkString("\n"))
   }
 
   test("compressed SDS really compresses and selects by name") {
