@@ -1014,7 +1014,7 @@ object Bench {
         s"$base/pyr_l1b", "mean")
     }
     // A/B №1 — window load (1600x1600x4 box, count+avg): exploded
-    // posexplode pixel view vs fused BoxStatsExpr chunk fold.
+    // posexplode pixel view vs fused BoxStats chunk fold.
     // Interleaved (timedAB) so both sides see the same noise windows.
     val Seq(windowExploded, windowFused) = timedAB(spark,
       "grid_window_load_exploded_1600x1600x4",

@@ -11,8 +11,8 @@ import org.apache.spark.sql.types._
 
 import graft.grid.PayloadCodec
 
-/** Fused chunk-payload kernels: decode + map + reduce in ONE generated
-  * loop per chunk row, never materializing the pixel rows.
+/** Fused chunk-payload kernels: decode + map + reduce in ONE call per
+  * chunk row, never materializing the pixel rows.
   *
   * The exploded pixel view (`FractionStore.pixels`) is the right shape
   * for ad-hoc relational queries, but a whole-store scan kernel pays
@@ -20,11 +20,18 @@ import graft.grid.PayloadCodec
   * buffers. The reference hit the same wall in Python and moved the QA
   * decode to a Cython+OpenMP kernel (modis_qa.pyx:105-120, "takes a long
   * time" otherwise); the Spark-native equivalent is a custom Catalyst
-  * expression whose generated code folds the payload bytes directly —
-  * one virtual call per CHUNK (~640k px), not per pixel. Parallelism
+  * expression whose generated code hands the payload bytes to a compiled
+  * fold — one call per CHUNK (~10^5 px), not per pixel. Parallelism
   * comes from Spark's task scheduling over chunk rows, the moral
   * equivalent of the reference's OpenMP loop, except it also distributes
   * across executors.
+  *
+  * Two expressions carry every kernel: [[QaConfStatsExpr]] folds a whole
+  * QA payload, and [[ChunkKernelExpr]] runs one windowed [[ChunkKernel]]
+  * (box stats, QA-masked box stats, per-pixel trend, per-pixel CUSUM)
+  * over a chunk row's payloads and geometry. A kernel supplies only its
+  * per-chunk fold; the payload-size check and the chunk∩window clip
+  * ([[ChunkWindow]]) are shared.
   *
   * The speedup is RECORDED, not claimed: Bench times the exploded and
   * fused paths back-to-back in the same process (the
@@ -47,55 +54,115 @@ object PayloadKernels {
     }
     new GenericInternalRow(Array[Any](sum, n.toLong))
   }
+}
 
-  /** Numeric element of a packed payload as double (layout per
-    * [[PayloadCodec]]; little-endian). */
-  private def elem(bytes: Array[Byte], code: Int, i: Int): Double =
-    (code: @annotation.switch) match {
-      case PayloadCodec.U8  => (bytes(i) & 0xff).toDouble
-      case PayloadCodec.I16 =>
-        (((bytes(2 * i + 1) & 0xff) << 8) | (bytes(2 * i) & 0xff)).toShort.toDouble
-      case PayloadCodec.U16 =>
-        (((bytes(2 * i + 1) & 0xff) << 8) | (bytes(2 * i) & 0xff)).toDouble
-      case PayloadCodec.I32 =>
-        ((bytes(4 * i + 3) & 0xff) << 24 | (bytes(4 * i + 2) & 0xff) << 16 |
-          (bytes(4 * i + 1) & 0xff) << 8 | (bytes(4 * i) & 0xff)).toDouble
-      case PayloadCodec.F32 =>
-        java.lang.Float.intBitsToFloat(
-          (bytes(4 * i + 3) & 0xff) << 24 | (bytes(4 * i + 2) & 0xff) << 16 |
-            (bytes(4 * i + 1) & 0xff) << 8 | (bytes(4 * i) & 0xff)).toDouble
-      case _ =>
-        java.lang.Double.longBitsToDouble(
-          (bytes(8 * i + 7) & 0xffL) << 56 | (bytes(8 * i + 6) & 0xffL) << 48 |
-            (bytes(8 * i + 5) & 0xffL) << 40 | (bytes(8 * i + 4) & 0xffL) << 32 |
-            (bytes(8 * i + 3) & 0xffL) << 24 | (bytes(8 * i + 2) & 0xffL) << 16 |
-            (bytes(8 * i + 1) & 0xffL) << 8 | (bytes(8 * i) & 0xffL))
+/** A windowed kernel's global pixel/time box: [xFrom, xTo) x
+  * [yFrom, yTo) x [tFrom, tTo). */
+final case class Box(xFrom: Int, xTo: Int, yFrom: Int, yTo: Int,
+                     tFrom: Int, tTo: Int)
+
+/** One chunk — w x h x nd values at global origin (x0, y0, t0), payload
+  * layout the store's [y][x][t] C-order (see FractionStore.pixels) —
+  * clipped to a [[Box]]: the chunk-local ranges [lxFrom, lxTo) x
+  * [lyFrom, lyTo) x [ltFrom, ltTo) that every windowed kernel folds. */
+final class ChunkWindow(val w: Int, val h: Int, val nd: Int,
+                        val x0: Int, val y0: Int, val t0: Int, box: Box) {
+  val lxFrom: Int = math.max(0, box.xFrom - x0)
+  val lxTo: Int = math.min(w, box.xTo - x0)
+  val lyFrom: Int = math.max(0, box.yFrom - y0)
+  val lyTo: Int = math.min(h, box.yTo - y0)
+  val ltFrom: Int = math.max(0, box.tFrom - t0)
+  val ltTo: Int = math.min(nd, box.tTo - t0)
+
+  /** No pixel-date of the chunk lies in the box — also the case for a
+    * box wholly outside the grid, whose pruning still reads an edge
+    * chunk. */
+  def isEmpty: Boolean = lxFrom >= lxTo || lyFrom >= lyTo || ltFrom >= ltTo
+}
+
+/** One windowed fused kernel: its per-chunk fold plus its plan-time
+  * constants (payload dtype codes, [[Box]], nodata, kernel parameters).
+  * [[run]] is what [[ChunkKernelExpr]] calls once per chunk row. */
+sealed abstract class ChunkKernel extends Serializable {
+  def name: String
+  def box: Box
+  /** Dtype code of each payload the kernel reads, in child order. */
+  def codes: Seq[Int]
+  /** Schema of one output entry. */
+  def entrySchema: StructType
+
+  /** Fold one chunk whose clip is not empty into output entries. */
+  protected def fold(c: ChunkWindow, payloads: Array[Array[Byte]]): Array[Any]
+
+  /** Check every payload against the chunk geometry (a payload from a
+    * store with other chunking would index the wrong pixels), clip the
+    * chunk to the box, and fold it. An empty clip yields no entry, so
+    * the fused result has exactly the groups of the exploded window
+    * load. */
+  final def run(payloads: Array[Array[Byte]], w: Int, h: Int, nd: Int,
+                x0: Int, y0: Int, t0: Int): ArrayData = {
+    var i = 0
+    while (i < payloads.length) {
+      val size = PayloadCodec.bytesPerElem(codes(i))
+      val len = payloads(i).length
+      if (len != w.toLong * h * nd * size) {
+        val n = len / size
+        val shape =
+          if (len % size == 0 && w * h > 0 && n % (w * h) == 0)
+            s"${w}x${h}x${n / (w * h)}"
+          else s"$len bytes"
+        throw new IllegalStateException(
+          s"$name: payload $i of the chunk at (x0, y0, t0) = " +
+            s"($x0, $y0, $t0) is $shape, but the chunk is ${w}x${h}x$nd " +
+            "(w x h x nd): a torn payload, or one from a store chunked " +
+            "otherwise")
+      }
+      i += 1
     }
+    val c = new ChunkWindow(w, h, nd, x0, y0, t0, box)
+    new GenericArrayData(if (c.isEmpty) Array.empty[Any] else fold(c, payloads))
+  }
+}
 
-  /** Per-date statistics of a single value payload restricted to a
-    * global-coordinate box — the fused form of "window load -> agg"
-    * (the P3 hot path). No QA gate: nodata is the only mask. Payload
-    * layout is the store's [y][x][t] C-order.
-    *
-    * Returns array of struct(t int, sum_v double, n_valid long,
-    * n_total long, min_v double?, max_v double?), one entry per
-    * chunk-local date in [tFrom, tTo): sum_v/n_valid/min/max aggregate
-    * values != nodata; n_total counts every in-box pixel; min_v/max_v
-    * are NULL for dates with no valid pixel (so min()/max() upstream
-    * aggregates skip them).
-    */
-  def boxStats(v: Array[Byte], vCode: Int,
-               w: Int, h: Int, nd: Int,
-               x0: Int, y0: Int, t0: Int,
-               bx0: Int, bx1: Int, by0: Int, by1: Int,
-               tFrom: Int, tTo: Int, nodata: Double): ArrayData = {
-    val lxFrom = math.max(0, bx0 - x0)
-    val lxTo = math.min(w, bx1 - x0)
-    val lyFrom = math.max(0, by0 - y0)
-    val lyTo = math.min(h, by1 - y0)
-    val ltFrom = math.max(0, tFrom - t0)
-    val ltTo = math.min(nd, tTo - t0)
-    val nt = math.max(0, ltTo - ltFrom)
+object ChunkKernel {
+  private def schema(fields: (String, DataType, Boolean)*): StructType =
+    StructType(fields.map { case (n, t, nullable) => StructField(n, t, nullable) })
+
+  val boxStatsSchema: StructType = schema(
+    ("t", IntegerType, false), ("sum_v", DoubleType, false),
+    ("n_valid", LongType, false), ("n_total", LongType, false),
+    ("min_v", DoubleType, true), ("max_v", DoubleType, true))
+  val maskedBoxStatsSchema: StructType = schema(
+    ("t", IntegerType, false), ("sum_v", DoubleType, false),
+    ("n_clear", LongType, false), ("n_total", LongType, false))
+  val trendSchema: StructType = schema(
+    ("x", IntegerType, false), ("y", IntegerType, false),
+    ("n", LongType, false), ("slope", DoubleType, false))
+  val cusumSchema: StructType = schema(
+    ("x", IntegerType, false), ("y", IntegerType, false),
+    ("t", IntegerType, false), ("cusum", DoubleType, false),
+    ("alarm", IntegerType, false))
+}
+
+/** Per-date statistics of one value payload in the box — the fused form
+  * of "window load -> agg" (the P3 hot path). No QA gate: nodata is the
+  * only mask.
+  *
+  * Entries: struct(t int, sum_v double, n_valid long, n_total long,
+  * min_v double?, max_v double?), one per chunk-local date in the clip:
+  * sum_v/n_valid/min/max aggregate values != nodata; n_total counts every
+  * in-box pixel; min_v/max_v are NULL for dates with no valid pixel (so
+  * min()/max() upstream aggregates skip them).
+  */
+final case class BoxStats(vCode: Int, box: Box, nodata: Double)
+    extends ChunkKernel {
+  def name: String = "box_stats"
+  def codes: Seq[Int] = Seq(vCode)
+  def entrySchema: StructType = ChunkKernel.boxStatsSchema
+
+  protected def fold(c: ChunkWindow, payloads: Array[Array[Byte]]): Array[Any] = {
+    import c._
+    val nt = ltTo - ltFrom
     val sums = new Array[Double](nt)
     val valid = new Array[Long](nt)
     val mins = Array.fill(nt)(Double.PositiveInfinity)
@@ -105,7 +172,7 @@ object PayloadKernels {
     // then folded in a branch-light loop — a per-element dtype switch
     // in the hot loop measured ~2x slower than bulk-decode + fold (the
     // same reason the exploded path's unpack-then-codegen is fast)
-    val decoded = PayloadCodec.decodeDouble(v, vCode)
+    val decoded = PayloadCodec.decodeDouble(payloads(0), vCode)
     var ly = lyFrom
     while (ly < lyTo) {
       var lx = lxFrom
@@ -137,34 +204,33 @@ object PayloadKernels {
         Array[Any](t0 + ltFrom + k, sums(k), valid(k), total, mn, mx))
       k += 1
     }
-    new GenericArrayData(rows)
+    rows
   }
+}
 
-  /** Per-date masked statistics of a value payload gated by a QA
-    * payload, restricted to a global-coordinate box — the fused form of
-    * "aligned two-band load -> conf -> groupBy(t)". Payload layout is
-    * the store's [y][x][t] C-order (see FractionStore.pixels).
-    *
-    * Returns array of struct(t int, sum_v double, n_clear long,
-    * n_total long), one entry per chunk-local date in [tFrom, tTo):
-    * sum_v/n_clear aggregate values whose QA confidence > 0.5 AND value
-    * != nodata; n_total counts every in-box pixel.
-    */
-  def maskedBoxStats(v: Array[Byte], q: Array[Byte], vCode: Int,
-                     w: Int, h: Int, nd: Int,
-                     x0: Int, y0: Int, t0: Int,
-                     bx0: Int, bx1: Int, by0: Int, by1: Int,
-                     tFrom: Int, tTo: Int, nodata: Double): ArrayData = {
-    val lxFrom = math.max(0, bx0 - x0)
-    val lxTo = math.min(w, bx1 - x0)
-    val lyFrom = math.max(0, by0 - y0)
-    val lyTo = math.min(h, by1 - y0)
-    val ltFrom = math.max(0, tFrom - t0)
-    val ltTo = math.min(nd, tTo - t0)
-    val nt = math.max(0, ltTo - ltFrom)
+/** Per-date masked statistics of a value payload gated by a uint16 QA
+  * payload in the box — the fused form of "aligned two-band load ->
+  * conf -> groupBy(t)".
+  *
+  * Entries: struct(t int, sum_v double, n_clear long, n_total long), one
+  * per chunk-local date in the clip: sum_v/n_clear aggregate values
+  * whose QA confidence > 0.5 AND value != nodata; n_total counts every
+  * in-box pixel.
+  */
+final case class MaskedBoxStats(vCode: Int, box: Box, nodata: Double)
+    extends ChunkKernel {
+  def name: String = "masked_box_stats"
+  def codes: Seq[Int] = Seq(vCode, PayloadCodec.U16)
+  def entrySchema: StructType = ChunkKernel.maskedBoxStatsSchema
+
+  protected def fold(c: ChunkWindow, payloads: Array[Array[Byte]]): Array[Any] = {
+    import c._
+    val nt = ltTo - ltFrom
     val sums = new Array[Double](nt)
     val clear = new Array[Long](nt)
     var total = 0L
+    val decoded = PayloadCodec.decodeDouble(payloads(0), vCode)
+    val q = payloads(1)
     var ly = lyFrom
     while (ly < lyTo) {
       var lx = lxFrom
@@ -176,7 +242,7 @@ object PayloadKernels {
           val qa = ((q(2 * i + 1) & 0xff) << 8) | (q(2 * i) & 0xff)
           val conf = QaDecode.modisQaConfScalar(qa)
           if (conf > 0.5f) {
-            val value = elem(v, vCode, i)
+            val value = decoded(i)
             if (value != nodata) {
               sums(lt - ltFrom) += value
               clear(lt - ltFrom) += 1
@@ -196,39 +262,92 @@ object PayloadKernels {
         Array[Any](t0 + ltFrom + k, sums(k), clear(k), total))
       k += 1
     }
-    new GenericArrayData(rows)
+    rows
   }
+}
 
-  /** Per-pixel one-sided CUSUM over one chunk payload restricted to a
-    * global-coordinate box — the fused form of
-    * `GridTimeSeries.cusumDetect(loadSliceXY(...))` when the whole
-    * requested date range (training AND monitoring) lives in one time
-    * slab. Same arithmetic as the relational closed form: baseline =
-    * valid dates in [tFrom, trainT); per valid monitoring date the
-    * micro-grid deviation d = (sm − n·x)·1e6 − n·slackMicro accumulates
-    * into the running sum r with running min mn (both exact integers on
-    * integer-valued grids), cusum = HALF_UP((r − mn)/(n·1e6), roundTo),
-    * alarm = (r − mn) > n·hMicro. Pixels with no valid training date
-    * are omitted, as are invalid monitoring dates.
-    *
-    * Returns array of struct(x int, y int, t int, cusum double,
-    * alarm int).
-    */
-  def cusumPixels(v: Array[Byte], vCode: Int,
-                  w: Int, h: Int, nd: Int,
-                  x0: Int, y0: Int, t0: Int,
-                  bx0: Int, bx1: Int, by0: Int, by1: Int,
-                  tFrom: Int, tTo: Int, nodata: Double,
-                  trainT: Int, slackMicro: Double, hMicro: Double,
-                  roundTo: Int): ArrayData = {
-    val lxFrom = math.max(0, bx0 - x0)
-    val lxTo = math.min(w, bx1 - x0)
-    val lyFrom = math.max(0, by0 - y0)
-    val lyTo = math.min(h, by1 - y0)
-    val ltFrom = math.max(0, tFrom - t0)
-    val ltTo = math.min(nd, tTo - t0)
+/** Per-pixel OLS trend slope in the box — the fused form of
+  * `GridTimeSeries.trendSlope(loadSliceXY(...))` when the requested date
+  * range lives in ONE time slab (fracNDates covers it), so every pixel's
+  * whole series sits inside this payload and the trend map needs no
+  * shuffle at all. Same arithmetic as the relational form:
+  * integer-valued double sums (exact in any order), slope rounded
+  * HALF_UP to `roundTo` decimals, 0 when the t-variance determinant is
+  * not positive; pixels with zero valid observations are omitted (the
+  * exploded groupBy never sees them).
+  *
+  * Entries: struct(x int, y int, n long, slope double).
+  */
+final case class TrendSlopes(vCode: Int, box: Box, nodata: Double,
+                             roundTo: Int) extends ChunkKernel {
+  def name: String = "trend_slopes"
+  def codes: Seq[Int] = Seq(vCode)
+  def entrySchema: StructType = ChunkKernel.trendSchema
+
+  protected def fold(c: ChunkWindow, payloads: Array[Array[Byte]]): Array[Any] = {
+    import c._
+    val decoded = PayloadCodec.decodeDouble(payloads(0), vCode)
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+    out.sizeHint((lxTo - lxFrom) * (lyTo - lyFrom))
+    var ly = lyFrom
+    while (ly < lyTo) {
+      var lx = lxFrom
+      while (lx < lxTo) {
+        val base = (ly * w + lx) * nd
+        var n = 0L
+        var st = 0.0; var sv = 0.0; var stv = 0.0; var stt = 0.0
+        var lt = ltFrom
+        while (lt < ltTo) {
+          val value = decoded(base + lt)
+          if (value != nodata) {
+            val t = (t0 + lt).toDouble
+            n += 1; st += t; sv += value; stv += t * value; stt += t * t
+          }
+          lt += 1
+        }
+        if (n > 0) {
+          val det = n * stt - st * st
+          val slope =
+            if (det > 0)
+              java.math.BigDecimal.valueOf((n * stv - st * sv) / det)
+                .setScale(roundTo, java.math.RoundingMode.HALF_UP)
+                .doubleValue()
+            else 0.0
+          out += new GenericInternalRow(
+            Array[Any](x0 + lx, y0 + ly, n, slope))
+        }
+        lx += 1
+      }
+      ly += 1
+    }
+    out.toArray
+  }
+}
+
+/** Per-pixel one-sided CUSUM in the box — the fused form of
+  * `GridTimeSeries.cusumDetect(loadSliceXY(...))` when the whole
+  * requested date range (training AND monitoring) lives in one time
+  * slab. Same arithmetic as the relational closed form: baseline =
+  * valid dates in [tFrom, trainT); per valid monitoring date the
+  * micro-grid deviation d = (sm − n·x)·1e6 − n·slackMicro accumulates
+  * into the running sum r with running min mn (both exact integers on
+  * integer-valued grids), cusum = HALF_UP((r − mn)/(n·1e6), roundTo),
+  * alarm = (r − mn) > n·hMicro. Pixels with no valid training date are
+  * omitted, as are invalid monitoring dates.
+  *
+  * Entries: struct(x int, y int, t int, cusum double, alarm int).
+  */
+final case class Cusum(vCode: Int, box: Box, nodata: Double, trainT: Int,
+                       slackMicro: Double, hMicro: Double, roundTo: Int)
+    extends ChunkKernel {
+  def name: String = "cusum_pixels"
+  def codes: Seq[Int] = Seq(vCode)
+  def entrySchema: StructType = ChunkKernel.cusumSchema
+
+  protected def fold(c: ChunkWindow, payloads: Array[Array[Byte]]): Array[Any] = {
+    import c._
     val ltTrain = math.min(math.max(0, trainT - t0), ltTo)
-    val decoded = PayloadCodec.decodeDouble(v, vCode)
+    val decoded = PayloadCodec.decodeDouble(payloads(0), vCode)
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
     out.sizeHint(math.max(0,
       (lxTo - lxFrom) * (lyTo - lyFrom) * (ltTo - ltTrain)))
@@ -269,69 +388,7 @@ object PayloadKernels {
       }
       ly += 1
     }
-    new GenericArrayData(out.toArray)
-  }
-
-  /** Per-pixel OLS trend slope over one chunk payload restricted to a
-    * global-coordinate box — the fused form of
-    * `GridTimeSeries.trendSlope(loadSliceXY(...))` when the requested
-    * date range lives in ONE time slab (fracNDates covers it), so every
-    * pixel's whole series sits inside this payload and the trend map
-    * needs no shuffle at all. Same arithmetic as the relational form:
-    * integer-valued double sums (exact in any order), slope rounded
-    * HALF_UP to `roundTo` decimals, 0 when the t-variance determinant
-    * is not positive; pixels with zero valid observations are omitted
-    * (the exploded groupBy never sees them).
-    *
-    * Returns array of struct(x int, y int, n long, slope double).
-    */
-  def trendSlopes(v: Array[Byte], vCode: Int,
-                  w: Int, h: Int, nd: Int,
-                  x0: Int, y0: Int, t0: Int,
-                  bx0: Int, bx1: Int, by0: Int, by1: Int,
-                  tFrom: Int, tTo: Int, nodata: Double,
-                  roundTo: Int): ArrayData = {
-    val lxFrom = math.max(0, bx0 - x0)
-    val lxTo = math.min(w, bx1 - x0)
-    val lyFrom = math.max(0, by0 - y0)
-    val lyTo = math.min(h, by1 - y0)
-    val ltFrom = math.max(0, tFrom - t0)
-    val ltTo = math.min(nd, tTo - t0)
-    val decoded = PayloadCodec.decodeDouble(v, vCode)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-    out.sizeHint(math.max(0, (lxTo - lxFrom) * (lyTo - lyFrom)))
-    var ly = lyFrom
-    while (ly < lyTo) {
-      var lx = lxFrom
-      while (lx < lxTo) {
-        val base = (ly * w + lx) * nd
-        var n = 0L
-        var st = 0.0; var sv = 0.0; var stv = 0.0; var stt = 0.0
-        var lt = ltFrom
-        while (lt < ltTo) {
-          val value = decoded(base + lt)
-          if (value != nodata) {
-            val t = (t0 + lt).toDouble
-            n += 1; st += t; sv += value; stv += t * value; stt += t * t
-          }
-          lt += 1
-        }
-        if (n > 0) {
-          val det = n * stt - st * st
-          val slope =
-            if (det > 0)
-              java.math.BigDecimal.valueOf((n * stv - st * sv) / det)
-                .setScale(roundTo, java.math.RoundingMode.HALF_UP)
-                .doubleValue()
-            else 0.0
-          out += new GenericInternalRow(
-            Array[Any](x0 + lx, y0 + ly, n, slope))
-        }
-        lx += 1
-      }
-      ly += 1
-    }
-    new GenericArrayData(out.toArray)
+    out.toArray
   }
 }
 
@@ -361,43 +418,41 @@ object QaConfStatsExpr {
     GraftColumnBridge.column(QaConfStatsExpr(GraftColumnBridge.expression(data)))
 }
 
-/** array<struct(t, sum_v, n_clear, n_total)> — fused masked box stats
-  * over an aligned (value, qa) chunk pair. Box/time window and nodata
-  * are plan-time constants; chunk geometry columns ride per row.
+/** array<kernel.entrySchema> — one windowed [[ChunkKernel]] over a chunk
+  * row. Children are the kernel's payload columns followed by the chunk
+  * geometry (w, h, nd, x0, y0, t0); the kernel's box, nodata and
+  * parameters are plan-time constants. Generated code evaluates the
+  * children and calls `kernel.run` once per chunk, inside whole-stage
+  * codegen.
   */
-case class MaskedBoxStatsExpr(
-    vData: Expression, qData: Expression,
-    w: Expression, h: Expression, nd: Expression,
-    x0: Expression, y0: Expression, t0: Expression,
-    vCode: Int, bx0: Int, bx1: Int, by0: Int, by1: Int,
-    tFrom: Int, tTo: Int, nodata: Double) extends Expression {
+case class ChunkKernelExpr(children: Seq[Expression], kernel: ChunkKernel)
+    extends Expression {
 
-  override def children: Seq[Expression] =
-    Seq(vData, qData, w, h, nd, x0, y0, t0)
+  private def nPayloads = kernel.codes.length
   override def dataType: DataType =
-    ArrayType(MaskedBoxStatsExpr.entrySchema, containsNull = false)
+    ArrayType(kernel.entrySchema, containsNull = false)
   override def nullable: Boolean = children.exists(_.nullable)
-  override def prettyName: String = "masked_box_stats"
+  override def prettyName: String = kernel.name
 
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(vData = c(0), qData = c(1), w = c(2), h = c(3), nd = c(4),
-      x0 = c(5), y0 = c(6), t0 = c(7))
+    copy(children = c)
 
   override def eval(input: InternalRow): Any = {
     val ins = children.map(_.eval(input))
     if (ins.contains(null)) null
-    else PayloadKernels.maskedBoxStats(
-      ins(0).asInstanceOf[Array[Byte]], ins(1).asInstanceOf[Array[Byte]],
-      vCode,
-      ins(2).asInstanceOf[Int], ins(3).asInstanceOf[Int],
-      ins(4).asInstanceOf[Int], ins(5).asInstanceOf[Int],
-      ins(6).asInstanceOf[Int], ins(7).asInstanceOf[Int],
-      bx0, bx1, by0, by1, tFrom, tTo, nodata)
+    else {
+      val (payloads, geometry) = ins.splitAt(nPayloads)
+      val Seq(w, h, nd, x0, y0, t0) = geometry.map(_.asInstanceOf[Int])
+      kernel.run(payloads.map(_.asInstanceOf[Array[Byte]]).toArray,
+        w, h, nd, x0, y0, t0)
+    }
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val k = ctx.addReferenceObj("kernel", kernel, classOf[ChunkKernel].getName)
     val evs = children.map(_.genCode(ctx))
     val anyNull = evs.map(_.isNull).mkString(" || ")
+    val (payloads, geometry) = evs.map(_.value.toString).splitAt(nPayloads)
     val resultType = "org.apache.spark.sql.catalyst.util.ArrayData"
     val code =
       code"""
@@ -405,289 +460,24 @@ case class MaskedBoxStatsExpr(
         boolean ${ev.isNull} = $anyNull;
         $resultType ${ev.value} = null;
         if (!${ev.isNull}) {
-          ${ev.value} = graft.functions.PayloadKernels.maskedBoxStats(
-            ${evs(0).value}, ${evs(1).value}, $vCode,
-            ${evs(2).value}, ${evs(3).value}, ${evs(4).value},
-            ${evs(5).value}, ${evs(6).value}, ${evs(7).value},
-            $bx0, $bx1, $by0, $by1, $tFrom, $tTo, $nodata);
+          ${ev.value} = $k.run(new byte[][] {${payloads.mkString(", ")}},
+            ${geometry.mkString(", ")});
         }
       """
     ev.copy(code = code)
   }
 }
 
-/** array<struct(t, sum_v, n_valid, n_total, min_v, max_v)> — fused
-  * per-date box statistics over ONE chunk payload (no QA gate; nodata
-  * is the only mask). The fused twin of the exploded window-load
-  * aggregate: decode + box filter + per-date fold in one generated
-  * loop per chunk row.
-  */
-case class BoxStatsExpr(
-    vData: Expression,
-    w: Expression, h: Expression, nd: Expression,
-    x0: Expression, y0: Expression, t0: Expression,
-    vCode: Int, bx0: Int, bx1: Int, by0: Int, by1: Int,
-    tFrom: Int, tTo: Int, nodata: Double) extends Expression {
-
-  override def children: Seq[Expression] =
-    Seq(vData, w, h, nd, x0, y0, t0)
-  override def dataType: DataType =
-    ArrayType(BoxStatsExpr.entrySchema, containsNull = false)
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def prettyName: String = "box_stats"
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(vData = c(0), w = c(1), h = c(2), nd = c(3),
-      x0 = c(4), y0 = c(5), t0 = c(6))
-
-  override def eval(input: InternalRow): Any = {
-    val ins = children.map(_.eval(input))
-    if (ins.contains(null)) null
-    else PayloadKernels.boxStats(
-      ins(0).asInstanceOf[Array[Byte]], vCode,
-      ins(1).asInstanceOf[Int], ins(2).asInstanceOf[Int],
-      ins(3).asInstanceOf[Int], ins(4).asInstanceOf[Int],
-      ins(5).asInstanceOf[Int], ins(6).asInstanceOf[Int],
-      bx0, bx1, by0, by1, tFrom, tTo, nodata)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val evs = children.map(_.genCode(ctx))
-    val anyNull = evs.map(_.isNull).mkString(" || ")
-    val resultType = "org.apache.spark.sql.catalyst.util.ArrayData"
-    val code =
-      code"""
-        ${evs.map(_.code).reduce(_ + _)}
-        boolean ${ev.isNull} = $anyNull;
-        $resultType ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.functions.PayloadKernels.boxStats(
-            ${evs(0).value}, $vCode,
-            ${evs(1).value}, ${evs(2).value}, ${evs(3).value},
-            ${evs(4).value}, ${evs(5).value}, ${evs(6).value},
-            $bx0, $bx1, $by0, $by1, $tFrom, $tTo, $nodata);
-        }
-      """
-    ev.copy(code = code)
-  }
-}
-
-/** array<struct(x, y, t, cusum, alarm)> — fused per-pixel CUSUM over
-  * ONE chunk payload (see [[PayloadKernels.cusumPixels]]). Valid only
-  * when training + monitoring dates sit in one time slab; the
-  * GridKernels entry point enforces that.
-  */
-case class CusumExpr(
-    vData: Expression,
-    w: Expression, h: Expression, nd: Expression,
-    x0: Expression, y0: Expression, t0: Expression,
-    vCode: Int, bx0: Int, bx1: Int, by0: Int, by1: Int,
-    tFrom: Int, tTo: Int, nodata: Double,
-    trainT: Int, slackMicro: Double, hMicro: Double, roundTo: Int)
-  extends Expression {
-
-  override def children: Seq[Expression] =
-    Seq(vData, w, h, nd, x0, y0, t0)
-  override def dataType: DataType =
-    ArrayType(CusumExpr.entrySchema, containsNull = false)
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def prettyName: String = "cusum_pixels"
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(vData = c(0), w = c(1), h = c(2), nd = c(3),
-      x0 = c(4), y0 = c(5), t0 = c(6))
-
-  override def eval(input: InternalRow): Any = {
-    val ins = children.map(_.eval(input))
-    if (ins.contains(null)) null
-    else PayloadKernels.cusumPixels(
-      ins(0).asInstanceOf[Array[Byte]], vCode,
-      ins(1).asInstanceOf[Int], ins(2).asInstanceOf[Int],
-      ins(3).asInstanceOf[Int], ins(4).asInstanceOf[Int],
-      ins(5).asInstanceOf[Int], ins(6).asInstanceOf[Int],
-      bx0, bx1, by0, by1, tFrom, tTo, nodata,
-      trainT, slackMicro, hMicro, roundTo)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val evs = children.map(_.genCode(ctx))
-    val anyNull = evs.map(_.isNull).mkString(" || ")
-    val resultType = "org.apache.spark.sql.catalyst.util.ArrayData"
-    val code =
-      code"""
-        ${evs.map(_.code).reduce(_ + _)}
-        boolean ${ev.isNull} = $anyNull;
-        $resultType ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.functions.PayloadKernels.cusumPixels(
-            ${evs(0).value}, $vCode,
-            ${evs(1).value}, ${evs(2).value}, ${evs(3).value},
-            ${evs(4).value}, ${evs(5).value}, ${evs(6).value},
-            $bx0, $bx1, $by0, $by1, $tFrom, $tTo, $nodata,
-            $trainT, $slackMicro, $hMicro, $roundTo);
-        }
-      """
-    ev.copy(code = code)
-  }
-}
-
-object CusumExpr {
+object ChunkKernelExpr {
   import org.apache.spark.sql.GraftColumnBridge
   import org.apache.spark.sql.functions.col
 
-  val entrySchema: StructType = StructType(Seq(
-    StructField("x", IntegerType, nullable = false),
-    StructField("y", IntegerType, nullable = false),
-    StructField("t", IntegerType, nullable = false),
-    StructField("cusum", DoubleType, nullable = false),
-    StructField("alarm", IntegerType, nullable = false)))
-
-  /** Column factory over chunk rows carrying vDataCol + the standard
-    * chunk geometry columns (w, h, nd, x0, y0, t0). */
-  def apply(vDataCol: Column, vDtype: String,
-            xFrom: Int, xTo: Int, yFrom: Int, yTo: Int,
-            tFrom: Int, tTo: Int, nodata: Double,
-            trainT: Int, slackMicro: Double, hMicro: Double,
-            roundTo: Int): Column = {
-    def e(c: Column) = GraftColumnBridge.expression(c)
-    GraftColumnBridge.column(CusumExpr(
-      e(vDataCol),
-      e(col("w")), e(col("h")), e(col("nd")),
-      e(col("x0")), e(col("y0")), e(col("t0")),
-      PayloadCodec.code(vDtype), xFrom, xTo, yFrom, yTo,
-      tFrom, tTo, nodata, trainT, slackMicro, hMicro, roundTo))
-  }
-}
-
-/** array<struct(x, y, n, slope)> — fused per-pixel OLS trend over ONE
-  * chunk payload (see [[PayloadKernels.trendSlopes]]). Valid only when
-  * the requested [tFrom, tTo) sits in one time slab; the GridKernels
-  * entry point enforces that.
-  */
-case class TrendSlopeExpr(
-    vData: Expression,
-    w: Expression, h: Expression, nd: Expression,
-    x0: Expression, y0: Expression, t0: Expression,
-    vCode: Int, bx0: Int, bx1: Int, by0: Int, by1: Int,
-    tFrom: Int, tTo: Int, nodata: Double, roundTo: Int)
-  extends Expression {
-
-  override def children: Seq[Expression] =
-    Seq(vData, w, h, nd, x0, y0, t0)
-  override def dataType: DataType =
-    ArrayType(TrendSlopeExpr.entrySchema, containsNull = false)
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def prettyName: String = "trend_slopes"
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(vData = c(0), w = c(1), h = c(2), nd = c(3),
-      x0 = c(4), y0 = c(5), t0 = c(6))
-
-  override def eval(input: InternalRow): Any = {
-    val ins = children.map(_.eval(input))
-    if (ins.contains(null)) null
-    else PayloadKernels.trendSlopes(
-      ins(0).asInstanceOf[Array[Byte]], vCode,
-      ins(1).asInstanceOf[Int], ins(2).asInstanceOf[Int],
-      ins(3).asInstanceOf[Int], ins(4).asInstanceOf[Int],
-      ins(5).asInstanceOf[Int], ins(6).asInstanceOf[Int],
-      bx0, bx1, by0, by1, tFrom, tTo, nodata, roundTo)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val evs = children.map(_.genCode(ctx))
-    val anyNull = evs.map(_.isNull).mkString(" || ")
-    val resultType = "org.apache.spark.sql.catalyst.util.ArrayData"
-    val code =
-      code"""
-        ${evs.map(_.code).reduce(_ + _)}
-        boolean ${ev.isNull} = $anyNull;
-        $resultType ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.functions.PayloadKernels.trendSlopes(
-            ${evs(0).value}, $vCode,
-            ${evs(1).value}, ${evs(2).value}, ${evs(3).value},
-            ${evs(4).value}, ${evs(5).value}, ${evs(6).value},
-            $bx0, $bx1, $by0, $by1, $tFrom, $tTo, $nodata, $roundTo);
-        }
-      """
-    ev.copy(code = code)
-  }
-}
-
-object TrendSlopeExpr {
-  import org.apache.spark.sql.GraftColumnBridge
-  import org.apache.spark.sql.functions.col
-
-  val entrySchema: StructType = StructType(Seq(
-    StructField("x", IntegerType, nullable = false),
-    StructField("y", IntegerType, nullable = false),
-    StructField("n", LongType, nullable = false),
-    StructField("slope", DoubleType, nullable = false)))
-
-  /** Column factory over chunk rows carrying vDataCol + the standard
-    * chunk geometry columns (w, h, nd, x0, y0, t0). */
-  def apply(vDataCol: Column, vDtype: String,
-            xFrom: Int, xTo: Int, yFrom: Int, yTo: Int,
-            tFrom: Int, tTo: Int, nodata: Double, roundTo: Int): Column = {
-    def e(c: Column) = GraftColumnBridge.expression(c)
-    GraftColumnBridge.column(TrendSlopeExpr(
-      e(vDataCol),
-      e(col("w")), e(col("h")), e(col("nd")),
-      e(col("x0")), e(col("y0")), e(col("t0")),
-      graft.grid.PayloadCodec.code(vDtype), xFrom, xTo, yFrom, yTo,
-      tFrom, tTo, nodata, roundTo))
-  }
-}
-
-object BoxStatsExpr {
-  import org.apache.spark.sql.GraftColumnBridge
-  import org.apache.spark.sql.functions.col
-
-  val entrySchema: StructType = StructType(Seq(
-    StructField("t", IntegerType, nullable = false),
-    StructField("sum_v", DoubleType, nullable = false),
-    StructField("n_valid", LongType, nullable = false),
-    StructField("n_total", LongType, nullable = false),
-    StructField("min_v", DoubleType, nullable = true),
-    StructField("max_v", DoubleType, nullable = true)))
-
-  /** Column factory over chunk rows carrying vDataCol + the standard
-    * chunk geometry columns (w, h, nd, x0, y0, t0). */
-  def apply(vDataCol: Column, vDtype: String,
-            xFrom: Int, xTo: Int, yFrom: Int, yTo: Int,
-            tFrom: Int, tTo: Int, nodata: Double): Column = {
-    def e(c: Column) = GraftColumnBridge.expression(c)
-    GraftColumnBridge.column(BoxStatsExpr(
-      e(vDataCol),
-      e(col("w")), e(col("h")), e(col("nd")),
-      e(col("x0")), e(col("y0")), e(col("t0")),
-      PayloadCodec.code(vDtype), xFrom, xTo, yFrom, yTo,
-      tFrom, tTo, nodata))
-  }
-}
-
-object MaskedBoxStatsExpr {
-  import org.apache.spark.sql.GraftColumnBridge
-  import org.apache.spark.sql.functions.col
-
-  val entrySchema: StructType = StructType(Seq(
-    StructField("t", IntegerType, nullable = false),
-    StructField("sum_v", DoubleType, nullable = false),
-    StructField("n_clear", LongType, nullable = false),
-    StructField("n_total", LongType, nullable = false)))
-
-  /** Column factory over aligned chunk rows carrying vDataCol/qDataCol +
-    * the standard chunk geometry columns (w, h, nd, x0, y0, t0). */
-  def apply(vDataCol: Column, qDataCol: Column, vDtype: String,
-            xFrom: Int, xTo: Int, yFrom: Int, yTo: Int,
-            tFrom: Int, tTo: Int, nodata: Double): Column = {
-    def e(c: Column) = GraftColumnBridge.expression(c)
-    GraftColumnBridge.column(MaskedBoxStatsExpr(
-      e(vDataCol), e(qDataCol),
-      e(col("w")), e(col("h")), e(col("nd")),
-      e(col("x0")), e(col("y0")), e(col("t0")),
-      PayloadCodec.code(vDtype), xFrom, xTo, yFrom, yTo,
-      tFrom, tTo, nodata))
+  /** Column factory over chunk rows carrying `payloads` (one per
+    * `kernel.codes` entry) + the standard chunk geometry columns
+    * (w, h, nd, x0, y0, t0). */
+  def column(payloads: Seq[Column], kernel: ChunkKernel): Column = {
+    val geometry = Seq("w", "h", "nd", "x0", "y0", "t0").map(col)
+    GraftColumnBridge.column(ChunkKernelExpr(
+      (payloads ++ geometry).map(GraftColumnBridge.expression), kernel))
   }
 }

@@ -3,7 +3,7 @@ package graft.grid
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{BoxStatsExpr, CusumExpr, MaskedBoxStatsExpr, QaConfStatsExpr, TrendSlopeExpr}
+import graft.functions._
 
 /** Fused whole-store scan kernels (see [[graft.functions.PayloadKernels]]):
   * the chunk-at-a-time execution shape for dense scans whose answer is an
@@ -21,19 +21,43 @@ object GridKernels {
       .select(QaConfStatsExpr(col("data")).as("s"))
       .agg(sum(col("s.sum_conf")).as("sum_conf"), sum(col("s.n")).as("n_px"))
 
+  /** Prune each store to the kernel's box, join the stores' chunk rows
+    * (all stores share one geogrid and time chunking), run the kernel
+    * once per chunk row and explode its entries into column `s`. */
+  private def scan(spark: SparkSession, stores: Seq[(GridHeader, String)],
+                   kernel: ChunkKernel): DataFrame = {
+    val b = kernel.box
+    val frames = stores.zipWithIndex.map { case ((header, root), i) =>
+      val f = FractionStore.fractionsForWindow(spark, header, root,
+        b.xFrom, b.xTo, b.yFrom, b.yTo, b.tFrom, b.tTo)
+      if (i == 0) f
+      else f.select(col("frac_num"), col("time_chunk"), col("data").as(s"data_$i"))
+    }
+    val payloads = col("data") +: (1 until stores.size).map(i => col(s"data_$i"))
+    frames.reduce(_.join(_, Seq("frac_num", "time_chunk")))
+      .select(explode(ChunkKernelExpr.column(payloads, kernel)).as("s"))
+  }
+
+  /** The per-pixel kernels read each pixel's whole series from one
+    * payload row, so [tFrom, tTo) must sit inside one time slab. */
+  private def requireOneSlab(header: GridHeader, tFrom: Int, tTo: Int,
+                             what: String, relational: String): Unit =
+    require((tTo - 1) / header.fracNDates == tFrom / header.fracNDates,
+      s"fused $what needs [$tFrom,$tTo) inside one time slab of " +
+        s"${header.fracNDates} dates; use GridTimeSeries.$relational over " +
+        "loadSliceXY for ranges that straddle slabs")
+
   /** Per-date statistics of one grid over a pixel/time box — the fused
     * form of `loadSliceXY(...).groupBy(t).agg(...)` (the P3 window-load
     * hot path without the pixel explode). Output: (t, mean_v, n_valid,
     * n_total, min_v, max_v); nodata pixels are excluded from
     * mean/min/max and n_valid, counted in n_total. Equality vs the
-    * exploded path is pinned by GridKernelsSpec. */
+    * exploded path is pinned by PayloadKernelsSpec. */
   def boxStatsByT(spark: SparkSession, header: GridHeader, root: String,
                   xFrom: Int, xTo: Int, yFrom: Int, yTo: Int,
                   tFrom: Int, tTo: Int): DataFrame =
-    FractionStore.fractionsForWindow(spark, header, root,
-      xFrom, xTo, yFrom, yTo, tFrom, tTo)
-      .select(explode(BoxStatsExpr(col("data"), header.dtype,
-        xFrom, xTo, yFrom, yTo, tFrom, tTo, header.nodata)).as("s"))
+    scan(spark, Seq((header, root)), BoxStats(PayloadCodec.code(header.dtype),
+        Box(xFrom, xTo, yFrom, yTo, tFrom, tTo), header.nodata))
       .groupBy(col("s.t").as("t"))
       .agg(sum(col("s.sum_v")).as("sv"), sum(col("s.n_valid")).as("nv"),
         sum(col("s.n_total")).as("n"),
@@ -45,17 +69,16 @@ object GridKernels {
 
   /** Whole-box aggregate of one grid over a pixel/time box (one row:
     * n_valid, mean_v, min_v, max_v) — the fused twin of
-    * `loadSliceXY(...).agg(count(value), avg(value), ...)`. */
+    * `loadSliceXY(...).agg(count(value), avg(value), ...)`; n_valid is
+    * 0, not NULL, for a box that holds no pixel. */
   def boxAgg(spark: SparkSession, header: GridHeader, root: String,
              xFrom: Int, xTo: Int, yFrom: Int, yTo: Int,
              tFrom: Int, tTo: Int): DataFrame =
-    FractionStore.fractionsForWindow(spark, header, root,
-      xFrom, xTo, yFrom, yTo, tFrom, tTo)
-      .select(explode(BoxStatsExpr(col("data"), header.dtype,
-        xFrom, xTo, yFrom, yTo, tFrom, tTo, header.nodata)).as("s"))
+    scan(spark, Seq((header, root)), BoxStats(PayloadCodec.code(header.dtype),
+        Box(xFrom, xTo, yFrom, yTo, tFrom, tTo), header.nodata))
       .agg(sum(col("s.sum_v")).as("sv"), sum(col("s.n_valid")).as("nv"),
         min(col("s.min_v")).as("min_v"), max(col("s.max_v")).as("max_v"))
-      .select(col("nv").as("n_valid"),
+      .select(coalesce(col("nv"), lit(0L)).as("n_valid"),
         when(col("nv") > 0, col("sv") / col("nv")).as("mean_v"),
         col("min_v"), col("max_v"))
 
@@ -65,19 +88,14 @@ object GridKernels {
     * whole trend map is a map-side generate: zero shuffle, no 10M-row
     * pixel explode feeding a 2.5M-group hash aggregate). Output matches
     * the relational form row-for-row: (x, y, n, slope). Equality is
-    * pinned by GridKernelsSpec; the A/B cost is a recorded bench pair
-    * (`grid_trend_slope_{exploded,fused}`). */
+    * pinned by PayloadKernelsSpec; the A/B cost is a recorded bench pair
+    * (`grid_trend_slope_1600x1600` vs `grid_trend_fused_1600x1600`). */
   def trendSlopeByPixel(spark: SparkSession, header: GridHeader, root: String,
                         xFrom: Int, xTo: Int, yFrom: Int, yTo: Int,
                         tFrom: Int, tTo: Int, roundTo: Int = 6): DataFrame = {
-    require((tTo - 1) / header.fracNDates == tFrom / header.fracNDates,
-      s"fused trend needs [$tFrom,$tTo) inside one time slab of " +
-        s"${header.fracNDates} dates; use GridTimeSeries.trendSlope over " +
-        "loadSliceXY for ranges that straddle slabs")
-    FractionStore.fractionsForWindow(spark, header, root,
-      xFrom, xTo, yFrom, yTo, tFrom, tTo)
-      .select(explode(TrendSlopeExpr(col("data"), header.dtype,
-        xFrom, xTo, yFrom, yTo, tFrom, tTo, header.nodata, roundTo)).as("s"))
+    requireOneSlab(header, tFrom, tTo, "trend", "trendSlope")
+    scan(spark, Seq((header, root)), TrendSlopes(PayloadCodec.code(header.dtype),
+        Box(xFrom, xTo, yFrom, yTo, tFrom, tTo), header.nodata, roundTo))
       .select(col("s.x").as("x"), col("s.y").as("y"),
         col("s.n").as("n"), col("s.slope").as("slope"))
   }
@@ -88,22 +106,17 @@ object GridKernels {
     * map is a map-side generate (zero shuffle, no pixel explode feeding
     * window frames). Output matches the relational form row-for-row:
     * (x, y, t, cusum, alarm); equality pinned by PayloadKernelsSpec,
-    * cost recorded as the `grid_cusum_{windowed,fused}` bench pair. */
+    * cost recorded as the bench pair `grid_cusum_1600x1600x4` vs
+    * `grid_cusum_fused_1600x1600x4`. */
   def cusumByPixel(spark: SparkSession, header: GridHeader, root: String,
                    xFrom: Int, xTo: Int, yFrom: Int, yTo: Int,
                    tFrom: Int, tTo: Int, trainT: Int, slack: Double,
                    threshold: Double, roundTo: Int = 4): DataFrame = {
     require(trainT >= 1, s"trainT must be >= 1, got $trainT")
-    require((tTo - 1) / header.fracNDates == tFrom / header.fracNDates,
-      s"fused cusum needs [$tFrom,$tTo) inside one time slab of " +
-        s"${header.fracNDates} dates; use GridTimeSeries.cusumDetect over " +
-        "loadSliceXY for ranges that straddle slabs")
-    FractionStore.fractionsForWindow(spark, header, root,
-      xFrom, xTo, yFrom, yTo, tFrom, tTo)
-      .select(explode(CusumExpr(col("data"), header.dtype,
-        xFrom, xTo, yFrom, yTo, tFrom, tTo, header.nodata,
-        trainT, math.rint(slack * 1e6), math.rint(threshold * 1e6),
-        roundTo)).as("s"))
+    requireOneSlab(header, tFrom, tTo, "cusum", "cusumDetect")
+    scan(spark, Seq((header, root)), Cusum(PayloadCodec.code(header.dtype),
+        Box(xFrom, xTo, yFrom, yTo, tFrom, tTo), header.nodata,
+        trainT, math.rint(slack * 1e6), math.rint(threshold * 1e6), roundTo))
       .select(col("s.x").as("x"), col("s.y").as("y"), col("s.t").as("t"),
         col("s.cusum").as("cusum"), col("s.alarm").as("alarm"))
   }
@@ -112,23 +125,18 @@ object GridKernels {
     * fused form of the aligned two-band load + conf gate + groupBy(t).
     * Output: (t, mean_masked, n) where mean_masked averages value
     * pixels with conf > 0.5 and value != nodata; n counts all in-box
-    * pixels per date. */
+    * pixels per date. The QA store must be uint16 (MODIS QA words). */
   def maskedMeanByT(spark: SparkSession,
                     value: (GridHeader, String), qa: (GridHeader, String),
                     xFrom: Int, xTo: Int, yFrom: Int, yTo: Int,
                     tFrom: Int, tTo: Int): DataFrame = {
-    val (vh, vRoot) = value
-    val (qh, qRoot) = qa
+    val (vh, qh) = (value._1, qa._1)
     require(vh.sameGeogrid(qh) && vh.fracNDates == qh.fracNDates,
       "fused masked mean needs one shared geogrid + time chunking")
-    val v = FractionStore.fractionsForWindow(spark, vh, vRoot,
-      xFrom, xTo, yFrom, yTo, tFrom, tTo)
-    val q = FractionStore.fractionsForWindow(spark, qh, qRoot,
-        xFrom, xTo, yFrom, yTo, tFrom, tTo)
-      .select(col("frac_num"), col("time_chunk"), col("data").as("data_q"))
-    v.join(q, Seq("frac_num", "time_chunk"))
-      .select(explode(MaskedBoxStatsExpr(col("data"), col("data_q"),
-        vh.dtype, xFrom, xTo, yFrom, yTo, tFrom, tTo, vh.nodata)).as("s"))
+    require(qh.dtype == "uint16",
+      s"fused masked mean needs a uint16 QA store; ${qh.name} is ${qh.dtype}")
+    scan(spark, Seq(value, qa), MaskedBoxStats(PayloadCodec.code(vh.dtype),
+        Box(xFrom, xTo, yFrom, yTo, tFrom, tTo), vh.nodata))
       .groupBy(col("s.t").as("t"))
       .agg(sum(col("s.sum_v")).as("sv"), sum(col("s.n_clear")).as("nc"),
         sum(col("s.n_total")).as("n"))

@@ -725,7 +725,7 @@ object GridQueries {
         20, 180, 30, 170, 0, 4)
     },
 
-    // Fused single-band window kernel (BoxStatsExpr): per-date stats of
+    // Fused single-band window kernel (BoxStats): per-date stats of
     // a non-chunk-aligned box with NO pixel explode — the P3 window-load
     // hot path in its fused form (the exploded twin is pinned equal by
     // PayloadKernelsSpec and A/B-timed by Bench).

@@ -100,6 +100,39 @@ class PlanAuditSpec extends AnyFunSuite {
       .contains("time_chunk"))
   }
 
+  test("fused chunk kernels stay inside whole-stage codegen") {
+    import org.apache.spark.sql.execution.{InputAdapter, WholeStageCodegenExec}
+    val h = GridHeader.load(spark, root)
+    val qh = h.copy(name = "tiny_qa", dtype = "uint16", nodata = 65535.0)
+    val qaRoot = java.nio.file.Files.createTempDirectory("graft_audit_qa").toString
+    SyntheticGrid.writeDirect(spark, qh, qaRoot, SyntheticGrid.qaScalar)
+    def stageNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case other => other +: other.children.flatMap(stageNodes)
+    }
+    Seq(
+      "boxStatsByT" -> GridKernels.boxStatsByT(spark, h, root, 17, 40, 3, 12, 2, 11),
+      "maskedMeanByT" -> GridKernels.maskedMeanByT(spark, (h, root), (qh, qaRoot),
+        17, 40, 3, 12, 2, 11),
+      "trendSlopeByPixel" -> GridKernels.trendSlopeByPixel(spark, h, root,
+        17, 40, 3, 12, 9, 11),
+      "cusumByPixel" -> GridKernels.cusumByPixel(spark, h, root,
+        17, 40, 3, 12, 9, 11, trainT = 10, slack = 0.5, threshold = 5.0)
+    ).foreach { case (name, df) =>
+      val plans = executed(df)
+      val kernels = plans.filter(_.expressions.exists(
+        _.exists(_.isInstanceOf[graft.functions.ChunkKernelExpr])))
+      assert(kernels.nonEmpty, s"$name: no node holds the kernel")
+      val generated = plans.collect { case w: WholeStageCodegenExec => w }
+        .flatMap(w => stageNodes(w.child))
+      kernels.foreach { k =>
+        assert(generated.exists(_ eq k),
+          s"$name: ${k.nodeName} holding the kernel runs outside whole-stage codegen")
+      }
+    }
+    graft.sources.GridExports.deleteStore(spark, qaRoot)
+  }
+
   test("decontaminate broadcasts the benchmark shingle set") {
     import spark.implicits._
     val corpus = (0 until 300).map(i =>
