@@ -42,28 +42,30 @@ final case class ChunkGrid(
   def fracYRange(fy: Int): (Int, Int) =
     (fy * fracHeight, math.min((fy + 1) * fracHeight, height))
 
-  /** Minimal set of fracNums intersecting the rect
-    * [xFrom, xTo) x [yFrom, yTo) — jgrid3.py:470-489. Matches the
-    * reference's end-exclusive edge handling: an empty rect yields no
-    * fractions; a rect ending exactly on a chunk boundary does not spill
-    * into the next chunk.
-    */
-  def fracsForRectXY(xFrom: Int, xTo: Int, yFrom: Int, yTo: Int): Seq[Int] = {
-    if (xTo <= xFrom || yTo <= yFrom) return Seq.empty
-    val fx0 = math.max(0, xFrom / fracWidth)
-    val fx1 = math.min(numFracsX - 1, (xTo - 1) / fracWidth)
-    val fy0 = math.max(0, yFrom / fracHeight)
-    val fy1 = math.min(numFracsY - 1, (yTo - 1) / fracHeight)
-    for { fy <- fy0 to fy1; fx <- fx0 to fx1 } yield fracNum(fx, fy)
+  /** Chunks of `size` along an axis of `extent` that intersect
+    * [from, to), as an index range: the window is clipped to
+    * [0, extent) first, so an empty or off-grid window yields no chunk
+    * and a window ending exactly on a chunk boundary does not spill into
+    * the next chunk. The one range computation behind
+    * [[fracsForRectXY]], [[timeChunksForRange]] and the store's window
+    * pruning. */
+  def chunkSpan(from: Int, to: Int, extent: Int, size: Int): Range = {
+    val (a, b) = (math.max(0, from), math.min(extent, to))
+    if (b <= a) Range(0, 0) else (a / size) to ((b - 1) / size)
   }
 
+  /** Minimal set of fracNums intersecting the rect
+    * [xFrom, xTo) x [yFrom, yTo) — jgrid3.py:470-489, with the
+    * reference's end-exclusive edge handling. */
+  def fracsForRectXY(xFrom: Int, xTo: Int, yFrom: Int, yTo: Int): Seq[Int] =
+    for {
+      fy <- chunkSpan(yFrom, yTo, height, fracHeight)
+      fx <- chunkSpan(xFrom, xTo, width, fracWidth)
+    } yield fracNum(fx, fy)
+
   /** Time chunks intersecting [tFrom, tTo) — jgrid3.py:298-305, 517-518. */
-  def timeChunksForRange(tFrom: Int, tTo: Int): Seq[Int] = {
-    if (tTo <= tFrom) return Seq.empty
-    val c0 = math.max(0, tFrom / fracNDates)
-    val c1 = math.min(numTimeChunks - 1, (tTo - 1) / fracNDates)
-    c0 to c1
-  }
+  def timeChunksForRange(tFrom: Int, tTo: Int): Seq[Int] =
+    chunkSpan(tFrom, tTo, nDates, fracNDates)
 
   /** Date range (inclusive, exclusive) stored in time chunk c; the last
     * chunk is ragged when fracNDates does not divide nDates. */

@@ -317,83 +317,158 @@ object FractionStore {
 
   /** Fraction rows pruned to a pixel/time window. The frac_x/frac_y/
     * time_chunk predicates are partition- and stats-prunable (P6/P7);
-    * this is the Catalyst analog of fracs_for_rect_xy.
+    * this is the Catalyst analog of fracs_for_rect_xy, with the chunk
+    * ranges taken from [[ChunkGrid.chunkSpan]]. An empty or off-grid
+    * window prunes to no chunk at all (the optimizer drops the scan).
     */
   def fractionsForWindow(spark: SparkSession, header: GridHeader, root: String,
                          xFrom: Int, xTo: Int, yFrom: Int, yTo: Int,
                          tFrom: Int, tTo: Int): DataFrame = {
     val g = header.chunkGrid
-    val fx0 = math.max(0, xFrom / g.fracWidth)
-    val fx1 = math.min(g.numFracsX - 1, math.max(0, (xTo - 1) / g.fracWidth))
-    val fy0 = math.max(0, yFrom / g.fracHeight)
-    val fy1 = math.min(g.numFracsY - 1, math.max(0, (yTo - 1) / g.fracHeight))
-    val c0 = math.max(0, tFrom / g.fracNDates)
-    val c1 = math.min(math.max(0, g.numTimeChunks - 1),
-      math.max(0, (tTo - 1) / g.fracNDates))
+    def in(c: String, r: Range): Column =
+      if (r.isEmpty) lit(false) else col(c).between(r.head, r.last)
     fractions(spark, root)
-      .filter(col("time_chunk").between(c0, c1))
-      .filter(col("frac_x").between(fx0, fx1) && col("frac_y").between(fy0, fy1))
+      .filter(in("time_chunk", g.chunkSpan(tFrom, tTo, g.nDates, g.fracNDates)))
+      .filter(in("frac_x", g.chunkSpan(xFrom, xTo, g.width, g.fracWidth)) &&
+        in("frac_y", g.chunkSpan(yFrom, yTo, g.height, g.fracHeight)))
   }
 
-  /** Explode fraction rows to the relational pixel view
-    * (x, y, t, value) — the deterministic explode of SURVEY §1.4.
-    * `maskNodata=true` turns the header's nodata into NULL (P9).
+  private val joinKey = Seq("frac_num", "time_chunk")
+
+  /** Placement columns of a chunk row: everything but the payload. */
+  private[grid] val placement = joinKey ++
+    Seq("frac_x", "frac_y", "x0", "y0", "t0", "w", "h", "nd")
+
+  /** THE aligned-chunk join (reference J2, jgrid/utils.py:114-148, and
+    * the input join of a pipeline step, hadoop/spark.py:146-167): N
+    * sides of (header, chunk rows) on one geogrid and time chunking are
+    * joined on (frac_num, time_chunk). Returns side 0's placement
+    * columns plus `data_0..data_{n-1}` (packed payloads). Every aligned
+    * read — window loads, bucketed joins, fused kernels, the pipeline's
+    * input pairing — goes through here, so the join shuffles chunk rows
+    * (hundreds of ~MB payloads), never exploded pixels.
+    *
+    * A chunk whose sides disagree on `nd` (one band appended with
+    * [[IncrementalAppend.appendDates]], the other not) fails the job,
+    * naming the chunk and both shapes: side i's payload length must be
+    * side 0's w*h*nd in side i's dtype — so the check reads no column
+    * beyond the payload. Under joinType "left" an absent side is NULL
+    * and passes.
     */
-  def pixels(header: GridHeader, fracRows: DataFrame,
-             maskNodata: Boolean = true,
-             keepChunkCols: Boolean = false): DataFrame = {
-    // keepChunkCols passes the STORED frac_x/frac_y/time_chunk through
-    // the explode: predicates on them (e.g. added by the LatLngPruning
-    // rule) push below the Generate all the way to the parquet scan
-    val chunkCols =
-      if (keepChunkCols) Seq(col("frac_x"), col("frac_y"), col("time_chunk"))
-      else Seq.empty
-    val exploded = fracRows
-      .select(chunkCols ++ Seq(col("x0"), col("y0"), col("t0"), col("w"),
-        col("nd"),
-        posexplode(unpack(header, col("data"))).as(Seq("pos", "value"))): _*)
+  private[grid] def alignedJoin(sides: Seq[(GridHeader, DataFrame)],
+                                joinType: String = "inner"): DataFrame = {
+    require(sides.nonEmpty)
+    val h0 = sides.head._1
+    require(sides.forall(_._1.sharesChunking(h0)),
+      "aligned chunk join needs one shared geogrid + time chunking")
+    val base = sides.head._2
+      .select(placement.map(col) :+ col("data").as("data_0"): _*)
+    val joined = sides.zipWithIndex.drop(1).foldLeft(base) {
+      case (acc, ((_, rows), i)) =>
+        acc.join(rows.select(col("frac_num"), col("time_chunk"),
+          col("data").as(s"data_$i")), joinKey, joinType)
+    }
+    val checked = sides.zipWithIndex.drop(1).map { case ((h, _), i) =>
+      val data = col(s"data_$i")
+      val px = col("w") * col("h")
+      val size = PayloadCodec.bytesPerElem(PayloadCodec.code(h.dtype))
+      when(octet_length(data) =!= px * col("nd") * size,
+        raise_error(format_string("aligned chunk (frac_num, time_chunk) = " +
+          "(%d, %d) at (x0, y0, t0) = (%d, %d, %d): side 0 is %dx%dx%d but " +
+          s"side $i is %dx%dx%d (w x h x nd): the stores' time axes " +
+          "differ", col("frac_num"), col("time_chunk"),
+          col("x0"), col("y0"), col("t0"), col("w"), col("h"), col("nd"),
+          col("w"), col("h"), (octet_length(data) / (px * size)).cast("int"))))
+        .otherwise(data).as(s"data_$i")
+    }
+    joined.select(placement.map(col) ++ (col("data_0") +: checked): _*)
+  }
+
+  /** THE chunk -> pixel explode: chunk rows carrying `data_0..data_{n-1}`
+    * (one per header) become the pixel view (x, y, t, value_0..
+    * value_{n-1}), preceded by `chunkCols` when given. `masks(i)` turns
+    * payload i's nodata into NULL (P9 per band).
+    *
+    * Payloads 1..n-1 are unpacked in ONE projection below the generator
+    * and indexed per pixel with element_at on the materialized arrays
+    * (O(1) each): Catalyst does not CSE into generators, and element_at
+    * over an inlined unpack would re-decode the chunk per pixel. Payload
+    * 0 is unpacked inside the posexplode, which evaluates it once per
+    * chunk row; over an attribute, Catalyst would infer a
+    * `size(arr_0) > 0` filter and push it below that projection with the
+    * unpack inlined — a second decode of every chunk.
+    */
+  private[grid] def explodePixels(headers: Seq[GridHeader], chunks: DataFrame,
+                                  masks: Seq[Boolean],
+                                  chunkCols: Seq[String] = Nil): DataFrame = {
+    require(headers.nonEmpty && masks.length == headers.length)
+    val geometry = (chunkCols ++ Seq("x0", "y0", "t0", "w", "nd")).map(col)
+    val unpacked = chunks.select(geometry ++ (col("data_0") +:
+      headers.indices.drop(1).map(i =>
+        unpack(headers(i), col(s"data_$i")).as(s"arr_$i"))): _*)
+    val exploded = unpacked.select(geometry ++
+      headers.indices.drop(1).map(i => col(s"arr_$i")) :+
+      posexplode(unpack(headers.head, col("data_0"))).as(Seq("pos", "value_0")): _*)
       .withColumn("pix", expr("pos div nd").cast("int"))
       .withColumn("x", col("x0") + col("pix") % col("w"))
       .withColumn("y", col("y0") + expr("pix div w").cast("int"))
       .withColumn("t", col("t0") + col("pos") % col("nd"))
-      .select(chunkCols ++ Seq(col("x"), col("y"), col("t"), col("value")): _*)
-    if (maskNodata && !header.nodata.isNaN)
-      exploded.withColumn("value",
-        nullif(col("value"), lit(header.nodata).cast(elementType(header.dtype))))
-    else exploded
+    val values = headers.zip(masks).zipWithIndex.map { case ((h, mask), i) =>
+      val raw = if (i == 0) col("value_0")
+                else element_at(col(s"arr_$i"), col("pos") + 1)
+      val v = if (mask && !h.nodata.isNaN)
+        nullif(raw, lit(h.nodata).cast(elementType(h.dtype)))
+      else raw
+      v.as(s"value_$i")
+    }
+    exploded.select(chunkCols.map(col) ++ Seq(col("x"), col("y"), col("t")) ++
+      values: _*)
   }
 
+  /** Explode fraction rows to the relational pixel view
+    * (x, y, t, value) — the deterministic explode of SURVEY §1.4, as
+    * the one-store case of [[explodePixels]]. `maskNodata=true` turns
+    * the header's nodata into NULL (P9).
+    *
+    * `keepChunkCols` passes the STORED frac_x/frac_y/time_chunk through
+    * the explode: predicates on them (e.g. added by the LatLngPruning
+    * rule) push below the Generate all the way to the parquet scan.
+    */
+  def pixels(header: GridHeader, fracRows: DataFrame,
+             maskNodata: Boolean = true,
+             keepChunkCols: Boolean = false): DataFrame =
+    explodePixels(Seq(header), fracRows.withColumnRenamed("data", "data_0"),
+      Seq(maskNodata),
+      if (keepChunkCols) Seq("frac_x", "frac_y", "time_chunk") else Nil)
+      .withColumnRenamed("value_0", "value")
+
   /** Rectangular window load as a pixel DataFrame — the P3
-    * `load_slice_xy` analog: chunk pruning, then exact box filter.
-    * Stays relational (no driver-side scatter); callers aggregate or
-    * collect as needed.
+    * `load_slice_xy` analog: chunk pruning, then exact box filter; the
+    * one-store case of [[loadAlignedSliceXY]]. Stays relational (no
+    * driver-side scatter); callers aggregate or collect as needed.
     */
   def loadSliceXY(spark: SparkSession, header: GridHeader, root: String,
                   xFrom: Int, xTo: Int, yFrom: Int, yTo: Int,
                   tFrom: Int, tTo: Int,
-                  maskNodata: Boolean = true): DataFrame = {
-    val fracs = fractionsForWindow(spark, header, root,
-      xFrom, xTo, yFrom, yTo, tFrom, tTo)
-    pixels(header, fracs, maskNodata)
-      .filter(col("x") >= xFrom && col("x") < xTo &&
-        col("y") >= yFrom && col("y") < yTo &&
-        col("t") >= tFrom && col("t") < tTo)
-  }
+                  maskNodata: Boolean = true): DataFrame =
+    loadAlignedSliceXY(spark, Seq((header, root)), xFrom, xTo, yFrom, yTo,
+      tFrom, tTo, Seq(maskNodata))
+      .withColumnRenamed("value_0", "value")
 
-  /** Aligned multi-store window load (J1/J2 fast path): same-geogrid
-    * stores are joined at CHUNK granularity on (frac_num, time_chunk),
-    * payloads unpacked once per chunk, then one explode emits
-    * (x, y, t, value_0..value_{n-1}).
+  /** Aligned multi-store window load (J1/J2 fast path): each store is
+    * pruned to the window, the stores' chunks are paired by the one
+    * aligned join ([[alignedJoin]]), the one explode ([[explodePixels]])
+    * emits (x, y, t, value_0..value_{n-1}) and the exact box filter
+    * runs last.
     *
-    * This is the scale-correct shape of a multi-band query: the join
-    * shuffles chunk keys (hundreds of ~MB rows), never exploded pixels —
-    * an (x, y, t) pixel join of two tile-scale bands shuffles 10^8 rows
-    * and was 100x slower in the tile benchmark. Secondary payloads are
-    * indexed per-pixel with element_at on the ALREADY-materialized
-    * arrays (O(1) each; the unpack sits in its own projection below the
-    * explode so it runs once per chunk, not once per pixel).
+    * This is the scale-correct shape of a multi-band query: an
+    * (x, y, t) pixel join of two tile-scale bands shuffles 10^8 rows
+    * and was 100x slower in the tile benchmark.
     *
     * `masks(i)` turns store i's nodata into NULL (P9 per band).
+    * joinType "left": chunks absent from a secondary store keep the
+    * base store's pixels with NULL for that band (unpack of a NULL
+    * payload is NULL; element_at on a NULL array is NULL).
     */
   def loadAlignedSliceXY(spark: SparkSession,
                          stores: Seq[(GridHeader, String)],
@@ -401,52 +476,10 @@ object FractionStore {
                          tFrom: Int, tTo: Int,
                          masks: Seq[Boolean],
                          joinType: String = "inner"): DataFrame = {
-    require(stores.nonEmpty && masks.length == stores.length)
-    val (h0, _) = stores.head
-    require(stores.forall(_._1.sameGeogrid(h0)) &&
-      stores.forall(_._1.fracNDates == h0.fracNDates),
-      "aligned load needs one shared geogrid + time chunking")
-    // joinType "left": chunks absent from a secondary store keep the
-    // base store's pixels with NULL for that band (unpack of a NULL
-    // payload is NULL; element_at on a NULL array is NULL)
-    val base = fractionsForWindow(spark, h0, stores.head._2,
-      xFrom, xTo, yFrom, yTo, tFrom, tTo)
-      .withColumnRenamed("data", "data_0")
-    val joined = stores.zipWithIndex.drop(1).foldLeft(base) {
-      case (acc, ((h, root), i)) =>
-        acc.join(fractionsForWindow(spark, h, root,
-          xFrom, xTo, yFrom, yTo, tFrom, tTo)
-          .select(col("frac_num"), col("time_chunk"),
-            col("data").as(s"data_$i")),
-          Seq("frac_num", "time_chunk"), joinType)
-    }
-    // materialize every unpacked array in ONE projection below the
-    // generator — Catalyst does not CSE into generators, and element_at
-    // over an inlined unpack would re-decode the chunk per pixel
-    val unpacked = joined.select(
-      Seq(col("x0"), col("y0"), col("t0"), col("w"), col("nd")) ++
-        stores.indices.map(i =>
-          unpack(stores(i)._1, col(s"data_$i")).as(s"arr_$i")): _*)
-    val exploded = unpacked.select(
-      Seq(col("x0"), col("y0"), col("t0"), col("w"), col("nd")) ++
-        stores.indices.drop(1).map(i => col(s"arr_$i")) :+
-        posexplode(col("arr_0")).as(Seq("pos", "value_0")): _*)
-    val withCoords = exploded
-      .withColumn("pix", expr("pos div nd").cast("int"))
-      .withColumn("x", col("x0") + col("pix") % col("w"))
-      .withColumn("y", col("y0") + expr("pix div w").cast("int"))
-      .withColumn("t", col("t0") + col("pos") % col("nd"))
-    val values = stores.indices.map { i =>
-      val raw = if (i == 0) col("value_0")
-                else element_at(col(s"arr_$i"), col("pos") + 1)
-      val h = stores(i)._1
-      val v = if (masks(i) && !h.nodata.isNaN)
-        nullif(raw, lit(h.nodata).cast(elementType(h.dtype)))
-      else raw
-      v.as(s"value_$i")
-    }
-    withCoords
-      .select(Seq(col("x"), col("y"), col("t")) ++ values: _*)
+    val chunks = alignedJoin(stores.map { case (h, root) =>
+      (h, fractionsForWindow(spark, h, root, xFrom, xTo, yFrom, yTo, tFrom, tTo))
+    }, joinType)
+    explodePixels(stores.map(_._1), chunks, masks)
       .filter(col("x") >= xFrom && col("x") < xTo &&
         col("y") >= yFrom && col("y") < yTo &&
         col("t") >= tFrom && col("t") < tTo)
@@ -456,8 +489,8 @@ object FractionStore {
 
   /** Save fraction rows as a BUCKETED table on the chunk key. Two grids
     * written with the same bucket count co-locate their chunks, so the
-    * aligned join ([[bucketedAlignedJoin]]) runs with NO shuffle on
-    * either side — the 100 TB shape for repeated multi-grid pipelines
+    * aligned join ([[bucketedAlignedJoinN]]) runs with NO shuffle on
+    * any side — the 100 TB shape for repeated multi-grid pipelines
     * over the same worldgrid (reference J2: fractions of aligned grids
     * live on the same HDFS nodes by layout).
     */
@@ -481,62 +514,21 @@ object FractionStore {
       .saveAsTable(table)
   }
 
-  /** Chunk-aligned join of two bucketed grid tables — the common case
-    * of [[bucketedAlignedJoinN]]. */
-  def bucketedAlignedJoin(spark: SparkSession,
-                          h0: GridHeader, table0: String,
-                          h1: GridHeader, table1: String,
-                          masks: Seq[Boolean] = Seq(true, true)): DataFrame =
-    bucketedAlignedJoinN(spark, Seq((h0, table0), (h1, table1)), masks)
-
   /** Chunk-aligned join of N bucketed grid tables: every side reads
-    * pre-bucketed on (frac_num, time_chunk), so the whole N-way join
-    * plans with NO Exchange (verified by BucketedJoinSpec for 2 and 3
-    * grids). Returns the pixel view (x, y, t, value_0..value_{n-1})
-    * like [[loadAlignedSliceXY]] — the zero-shuffle input path for
-    * multi-band pipelines over a shared worldgrid (reference J2).
+    * pre-bucketed on (frac_num, time_chunk), so the whole N-way
+    * [[alignedJoin]] plans with NO Exchange (verified by
+    * BucketedJoinSpec for 2 and 3 grids). Returns the pixel view
+    * (x, y, t, value_0..value_{n-1}) of [[explodePixels]], unfiltered —
+    * the zero-shuffle input path for multi-band pipelines over a shared
+    * worldgrid (reference J2).
     */
   def bucketedAlignedJoinN(spark: SparkSession,
                            stores: Seq[(GridHeader, String)],
                            masks: Seq[Boolean]): DataFrame = {
-    require(stores.length >= 2 && masks.length == stores.length)
-    val (h0, _) = stores.head
-    require(stores.forall(_._1.sameGeogrid(h0)) &&
-      stores.forall(_._1.fracNDates == h0.fracNDates),
-      "bucketed aligned join needs one shared geogrid + time chunking")
-    val base = spark.table(stores.head._2).withColumnRenamed("data", "data_0")
-    val joined = stores.zipWithIndex.drop(1).foldLeft(base) {
-      case (acc, ((_, table), i)) =>
-        acc.join(spark.table(table)
-          .select(col("frac_num"), col("time_chunk"),
-            col("data").as(s"data_$i")),
-          Seq("frac_num", "time_chunk"))
-    }
-    // one projection materializes every unpacked array below the
-    // generator (same no-CSE-into-generators rule as loadAlignedSliceXY)
-    val unpacked = joined.select(
-      Seq(col("x0"), col("y0"), col("t0"), col("w"), col("nd")) ++
-        stores.indices.map(i =>
-          unpack(stores(i)._1, col(s"data_$i")).as(s"arr_$i")): _*)
-    val exploded = unpacked.select(
-      Seq(col("x0"), col("y0"), col("t0"), col("w"), col("nd")) ++
-        stores.indices.drop(1).map(i => col(s"arr_$i")) :+
-        posexplode(col("arr_0")).as(Seq("pos", "value_0")): _*)
-    val withCoords = exploded
-      .withColumn("pix", expr("pos div nd").cast("int"))
-      .withColumn("x", col("x0") + col("pix") % col("w"))
-      .withColumn("y", col("y0") + expr("pix div w").cast("int"))
-      .withColumn("t", col("t0") + col("pos") % col("nd"))
-    val values = stores.indices.map { i =>
-      val raw = if (i == 0) col("value_0")
-                else element_at(col(s"arr_$i"), col("pos") + 1)
-      val h = stores(i)._1
-      val v = if (masks(i) && !h.nodata.isNaN)
-        nullif(raw, lit(h.nodata).cast(elementType(h.dtype)))
-      else raw
-      v.as(s"value_$i")
-    }
-    withCoords.select(Seq(col("x"), col("y"), col("t")) ++ values: _*)
+    require(stores.length >= 2)
+    explodePixels(stores.map(_._1),
+      alignedJoin(stores.map { case (h, table) => (h, spark.table(table)) }),
+      masks)
   }
 
   /** Lat/lng window load (P4, jgrid3.py:588-605): WGS84 rect -> grid xy
@@ -546,15 +538,10 @@ object FractionStore {
                       latMin: Double, latMax: Double,
                       lngMin: Double, lngMax: Double,
                       tFrom: Int, tTo: Int): DataFrame = {
-    val corners = Seq(
+    val (x0, x1, y0, y1) = header.pixelBox(Seq(
       header.latLngToXY(latMin, lngMin), header.latLngToXY(latMin, lngMax),
-      header.latLngToXY(latMax, lngMin), header.latLngToXY(latMax, lngMax))
-    val xs = corners.map(_._1)
-    val ys = corners.map(_._2)
-    loadSliceXY(spark, header, root,
-      math.max(0, xs.min.floor.toInt), math.min(header.width, xs.max.ceil.toInt),
-      math.max(0, ys.min.floor.toInt), math.min(header.height, ys.max.ceil.toInt),
-      tFrom, tTo)
+      header.latLngToXY(latMax, lngMin), header.latLngToXY(latMax, lngMax)))
+    loadSliceXY(spark, header, root, x0, x1, y0, y1, tFrom, tTo)
   }
 
   /** Polygon load (P5, jgrid/utils.py:27-51): bbox prune + per-pixel
@@ -566,12 +553,8 @@ object FractionStore {
                      poly: Array[(Double, Double)],
                      tFrom: Int, tTo: Int): DataFrame = {
     val xyPoly = poly.map { case (lat, lng) => header.latLngToXY(lat, lng) }
-    val xs = xyPoly.map(_._1)
-    val ys = xyPoly.map(_._2)
-    val df = loadSliceXY(spark, header, root,
-      math.max(0, xs.min.floor.toInt), math.min(header.width, xs.max.ceil.toInt),
-      math.max(0, ys.min.floor.toInt), math.min(header.height, ys.max.ceil.toInt),
-      tFrom, tTo)
+    val (x0, x1, y0, y1) = header.pixelBox(xyPoly)
+    val df = loadSliceXY(spark, header, root, x0, x1, y0, y1, tFrom, tTo)
     // pixel-center containment, like rasterization of the xy-projected
     // poly; native loop expression keeps codegen O(1) in vertex count
     df.withColumn("in_poly",

@@ -66,6 +66,24 @@ final case class GridHeader(
       fracWidth == other.fracWidth && fracHeight == other.fracHeight &&
       srs == other.srs && geot == other.geot
 
+  /** Same geogrid AND same time chunking: a chunk key (frac_num,
+    * time_chunk) names the same pixels and dates in both grids, so their
+    * chunks can be paired without touching a pixel (reference J2,
+    * jgrid/utils.py:114-148). */
+  def sharesChunking(other: GridHeader): Boolean =
+    sameGeogrid(other) && fracNDates == other.fracNDates
+
+  /** Pixel window [x0, x1) x [y0, y1) covering fractional pixel
+    * `points`, clamped to the grid and never inverted: points wholly off
+    * the grid give an empty window. */
+  def pixelBox(points: Iterable[(Double, Double)]): (Int, Int, Int, Int) = {
+    val (xs, ys) = points.unzip
+    val x0 = math.min(width, math.max(0, xs.min.floor.toInt))
+    val y0 = math.min(height, math.max(0, ys.min.floor.toInt))
+    (x0, math.max(x0, math.min(width, xs.max.ceil.toInt)),
+      y0, math.max(y0, math.min(height, ys.max.ceil.toInt)))
+  }
+
   def save(spark: SparkSession, root: String): Unit = {
     import spark.implicits._
     Seq(this).toDS().coalesce(1).write.mode("overwrite")

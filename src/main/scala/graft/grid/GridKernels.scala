@@ -21,21 +21,18 @@ object GridKernels {
       .select(QaConfStatsExpr(col("data")).as("s"))
       .agg(sum(col("s.sum_conf")).as("sum_conf"), sum(col("s.n")).as("n_px"))
 
-  /** Prune each store to the kernel's box, join the stores' chunk rows
-    * (all stores share one geogrid and time chunking), run the kernel
+  /** Prune each store to the kernel's box, pair the stores' chunk rows
+    * with the one aligned join ([[FractionStore.alignedJoin]]: shared
+    * geogrid + time chunking, matching `nd` per chunk), run the kernel
     * once per chunk row and explode its entries into column `s`. */
   private def scan(spark: SparkSession, stores: Seq[(GridHeader, String)],
                    kernel: ChunkKernel): DataFrame = {
     val b = kernel.box
-    val frames = stores.zipWithIndex.map { case ((header, root), i) =>
-      val f = FractionStore.fractionsForWindow(spark, header, root,
-        b.xFrom, b.xTo, b.yFrom, b.yTo, b.tFrom, b.tTo)
-      if (i == 0) f
-      else f.select(col("frac_num"), col("time_chunk"), col("data").as(s"data_$i"))
-    }
-    val payloads = col("data") +: (1 until stores.size).map(i => col(s"data_$i"))
-    frames.reduce(_.join(_, Seq("frac_num", "time_chunk")))
-      .select(explode(ChunkKernelExpr.column(payloads, kernel)).as("s"))
+    FractionStore.alignedJoin(stores.map { case (header, root) =>
+      (header, FractionStore.fractionsForWindow(spark, header, root,
+        b.xFrom, b.xTo, b.yFrom, b.yTo, b.tFrom, b.tTo))
+    }).select(explode(ChunkKernelExpr.column(
+      stores.indices.map(i => col(s"data_$i")), kernel)).as("s"))
   }
 
   /** The per-pixel kernels read each pixel's whole series from one
@@ -131,8 +128,6 @@ object GridKernels {
                     xFrom: Int, xTo: Int, yFrom: Int, yTo: Int,
                     tFrom: Int, tTo: Int): DataFrame = {
     val (vh, qh) = (value._1, qa._1)
-    require(vh.sameGeogrid(qh) && vh.fracNDates == qh.fracNDates,
-      "fused masked mean needs one shared geogrid + time chunking")
     require(qh.dtype == "uint16",
       s"fused masked mean needs a uint16 QA store; ${qh.name} is ${qh.dtype}")
     scan(spark, Seq(value, qa), MaskedBoxStats(PayloadCodec.code(vh.dtype),

@@ -2,14 +2,16 @@ package graft.grid
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** The distributed map-over-fractions pipeline (reference: U1, the
   * engine's centerpiece — rastercube/hadoop/spark.py:105-256): the
   * one-output case of [[GridMultiPipeline]], which holds the run.
   *
   * Semantics preserved from the reference:
-  *  - all inputs must share a geogrid (spark.py:146-153);
+  *  - all inputs must share a geogrid (spark.py:146-153) and, beyond
+  *    the reference, a time chunking; their chunks are paired by the
+  *    one aligned join ([[FractionStore.alignedJoin]]), which fails a
+  *    chunk whose inputs disagree on `nd`;
   *  - available = intersection of the inputs' chunk sets (J4, :166-167);
   *  - todo = available − already-written output chunks unless forceAll
   *    (J5 lazy resume, :171-177) — re-running a finished pipeline is a
@@ -81,7 +83,7 @@ object GridPipeline {
 
   /** Available chunks (frac_num, time_chunk, nd): the intersection of
     * the inputs' chunk sets, with `nd` taken from the first input — the
-    * input that [[alignedPadded]] takes chunk placement from. */
+    * input that [[alignedChunks]] takes chunk placement from. */
   private[grid] def availableKeys(spark: SparkSession,
                                   inputs: Seq[(GridHeader, String)]): DataFrame =
     inputs.zipWithIndex.map { case ((_, root), i) =>
@@ -138,38 +140,27 @@ object GridPipeline {
     }
   }
 
-  /** Align input chunks on the chunk key and pad to the fixed
-    * AlignedChunk shape. Inputs share chunking, so the join keys are
-    * dense and equi — shuffle once per input, no broadcast needed at
-    * scale. Payloads travel packed (binary) through the join; decode
-    * happens once in the kernel task. */
-  private[grid] def alignedPadded(spark: SparkSession,
+  /** The todo chunks of every input, paired by the one aligned join
+    * ([[FractionStore.alignedJoin]]: shared chunking, matching `nd` per
+    * chunk) and shaped as [[AlignedChunk]] rows. Inputs share chunking,
+    * so the join keys are dense and equi — shuffle once per input, no
+    * broadcast needed at scale. Payloads travel packed (binary) through
+    * the join; decode happens once in the kernel task. */
+  private[grid] def alignedChunks(spark: SparkSession,
                                   inputs: Seq[(GridHeader, String)],
-                                  todo: DataFrame): DataFrame = {
-    val aligned = inputs.zipWithIndex.map { case ((_, root), i) =>
-      chunkRows(spark, root)
-        .join(todo, key, "left_semi")
-        .select(col("frac_num"), col("time_chunk"), col("frac_x"), col("frac_y"),
-          col("x0"), col("y0"), col("t0"), col("w"), col("h"), col("nd"),
-          col("data").as(s"data_$i"))
-    }.reduce { (a, b) =>
-      a.join(b.select((Seq("frac_num", "time_chunk") ++
-        b.columns.filter(_.startsWith("data_"))).map(col): _*), key)
-    }
-    val dataCols = inputs.indices.map(i => s"data_$i")
-    (inputs.size until 4).foldLeft(
-      aligned.select((Seq("frac_num", "time_chunk", "frac_x", "frac_y",
-        "x0", "y0", "t0", "w", "h", "nd") ++ dataCols).map(col): _*)) {
-      (df, i) => df.withColumn(s"data_$i", lit(null).cast(BinaryType))
-    }
-  }
+                                  todo: DataFrame): DataFrame =
+    FractionStore.alignedJoin(inputs.map { case (h, root) =>
+      (h, chunkRows(spark, root).join(todo, key, "left_semi"))
+    }).select(FractionStore.placement.map(col) :+
+      array(inputs.indices.map(i => col(s"data_$i")): _*).as("payloads"): _*)
 }
 
 /** One aligned pass, SEVERAL derived grids: the pipeline run, for k
   * output grids ([[GridPipeline]] is its k = 1 case). The reference
   * derives one output per job, so a product that needs k derived
   * layers from the same inputs re-reads and re-joins them k times;
-  * here the kernel returns k payloads per chunk and each goes to its
+  * here the kernel returns k payloads per chunk (any k: an
+  * [[AlignedChunk]] carries one payload per grid) and each goes to its
   * own store — inputs are scanned, joined, and decoded ONCE regardless
   * of k (at 100 TB the input scan dominates, so k outputs cost ~1 input
   * pass + k cheap writes).
@@ -186,11 +177,10 @@ final class GridMultiPipeline(
     val outputs: Seq[(GridHeader, String)],
     val forceAll: Boolean = false) {
 
-  require(inputs.nonEmpty)
-  require(outputs.nonEmpty && outputs.size <= 4,
-    "1 to 4 output grids (AlignedChunk payload shape)")
-  require(inputs.forall(_._1.sameGeogrid(inputs.head._1)),
-    "all pipeline inputs must share a geogrid (hadoop/spark.py:146-153)")
+  require(inputs.nonEmpty && outputs.nonEmpty)
+  require(inputs.forall(_._1.sharesChunking(inputs.head._1)),
+    "all pipeline inputs must share a geogrid and time chunking " +
+      "(hadoop/spark.py:146-153)")
   require(outputs.forall(_._1.sameGeogrid(inputs.head._1)),
     "output grids must share the inputs' geogrid")
 
@@ -219,11 +209,11 @@ final class GridMultiPipeline(
       if (perOutputDone.forall(_.isDefined)) perOutputDone.flatten else Nil,
       stale)
 
-    val padded = GridPipeline.alignedPadded(spark, inputs, todo)
+    val aligned = GridPipeline.alignedChunks(spark, inputs, todo)
     val inCodes = inputs.map(p => PayloadCodec.code(p._1.dtype))
     val outDtypes = outputs.map(_._1.dtype)
     val nOut = outDtypes.size
-    val outRows = padded
+    val outRows = aligned
       .as[AlignedChunk]
       .map { c =>
         val row = FracRow(c.frac_num, c.time_chunk, c.frac_x, c.frac_y,
@@ -234,12 +224,9 @@ final class GridMultiPipeline(
         val outs = fn(row, payloads)
         require(outs.length == nOut,
           s"kernel returned ${outs.length} payloads for $nOut outputs")
-        val enc = outs.zip(outDtypes).map { case (a, dt) =>
+        c.copy(payloads = outs.zip(outDtypes).map { case (a, dt) =>
           PayloadCodec.encodeDouble(a, dt)
-        }
-        AlignedChunk(c.frac_num, c.time_chunk, c.frac_x, c.frac_y,
-          c.x0, c.y0, c.t0, c.w, c.h, c.nd,
-          enc.head, enc.lift(1), enc.lift(2), enc.lift(3))
+        })
       }
 
     val outDf = outRows.toDF()
@@ -251,9 +238,8 @@ final class GridMultiPipeline(
     try {
       val n = outDf.count()
       if (n > 0) outputs.zipWithIndex.foreach { case ((_, root), i) =>
-        val one = outDf.select(col("frac_num"), col("time_chunk"),
-          col("frac_x"), col("frac_y"), col("x0"), col("y0"), col("t0"),
-          col("w"), col("h"), col("nd"), col(s"data_$i").as("data"))
+        val one = outDf.select(FractionStore.placement.map(col) :+
+          col("payloads")(i).as("data"): _*)
         GridPipeline.writeOutput(one, root, forceAll, stale, writeDone(i))
       }
       n
@@ -264,18 +250,10 @@ final class GridMultiPipeline(
   }
 }
 
-/** Row shape for the aligned multi-input join (up to 4 inputs — the
-  * reference pipelines use 1-2). Extra payload columns are null when
-  * fewer inputs are present; payloads are packed binary
-  * ([[PayloadCodec]]).
-  */
+/** Row shape of an aligned chunk in a pipeline run: the chunk's
+  * placement and one packed payload ([[PayloadCodec]]) per grid — the
+  * inputs' on the way in, the outputs' on the way out. */
 final case class AlignedChunk(
     frac_num: Int, time_chunk: Int, frac_x: Int, frac_y: Int,
     x0: Int, y0: Int, t0: Int, w: Int, h: Int, nd: Int,
-    data_0: Array[Byte],
-    data_1: Option[Array[Byte]] = None,
-    data_2: Option[Array[Byte]] = None,
-    data_3: Option[Array[Byte]] = None) {
-  def payloads: Seq[Array[Byte]] =
-    Seq(Some(data_0), data_1, data_2, data_3).flatten
-}
+    payloads: Seq[Array[Byte]])

@@ -35,14 +35,9 @@ object GridZonal {
     val xyPolys = regions.map { case (name, ring) =>
       (name, ring.map { case (lat, lng) => header.latLngToXY(lat, lng) })
     }
-    val xs = xyPolys.flatMap(_._2.map(_._1))
-    val ys = xyPolys.flatMap(_._2.map(_._2))
-    // Clamp the union bbox to the grid; a region set fully outside the
-    // grid yields an empty (never inverted) window, hence zero rows.
-    val x0 = math.min(header.width, math.max(0, xs.min.floor.toInt))
-    val x1 = math.max(x0, math.min(header.width, xs.max.ceil.toInt))
-    val y0 = math.min(header.height, math.max(0, ys.min.floor.toInt))
-    val y1 = math.max(y0, math.min(header.height, ys.max.ceil.toInt))
+    // the union bbox, clamped to the grid: a region set fully outside
+    // the grid yields an empty window, hence zero rows
+    val (x0, x1, y0, y1) = header.pixelBox(xyPolys.flatMap(_._2))
     val df = FractionStore.loadSliceXY(spark, header, root,
       x0, x1, y0, y1, tFrom, tTo)
     val members = xyPolys.map { case (name, poly) =>

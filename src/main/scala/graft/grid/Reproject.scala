@@ -478,8 +478,7 @@ object Reproject {
     val (h0, _) = grids.head
     // fast path: every grid shares grid 1's geogrid AND time chunking →
     // ONE chunk-keyed aligned load, no pixel-level join at all
-    if (grids.forall { case (h, _) =>
-        h.sameGeogrid(h0) && h.fracNDates == h0.fracNDates })
+    if (grids.forall(_._1.sharesChunking(h0)))
       return FractionStore.loadAlignedSliceXY(spark, grids,
         xFrom, xTo, yFrom, yTo, t, t + 1,
         masks = grids.map(_ => true), joinType = "left")
@@ -490,7 +489,7 @@ object Reproject {
       .select(col("x"), col("y"), col("value").as("value_0"))
     grids.tail.zipWithIndex.foldLeft(base) { case (acc, ((h, r), i)) =>
       val warped =
-        if (h.sameGeogrid(h0) && h.fracNDates == h0.fracNDates)
+        if (h.sharesChunking(h0))
           FractionStore.loadAlignedSliceXY(spark, Seq((h, r)),
             xFrom, xTo, yFrom, yTo, t, t + 1, masks = Seq(true))
             .select(col("x"), col("y"), col("value_0").as(s"value_${i + 1}"))

@@ -264,10 +264,12 @@ class PayloadKernelsSpec extends AnyFunSuite {
 
   test("fused kernels return no rows for an empty or off-grid window") {
     // an empty x range inside the grid, and boxes wholly left of and
-    // above the grid (their chunk pruning still reads an edge chunk)
+    // above the grid: their chunk pruning reads no chunk at all
     Seq((37, 37, 8, 141), (-10, 0, 8, 141), (8, 141, -10, 0)).foreach {
       case (x0, x1, y0, y1) =>
         val w = s"window x [$x0, $x1) y [$y0, $y1)"
+        assert(FractionStore.fractionsForWindow(spark, nh, ndviRoot,
+          x0, x1, y0, y1, 0, 4).isEmpty, w)
         assert(boxStatsRows(nh, ndviRoot, x0, x1, y0, y1, 0, 4) == 0, w)
         assert(maskedRows((nh, ndviRoot), (qh, qaRoot),
           x0, x1, y0, y1, 0, 4) == 0, w)

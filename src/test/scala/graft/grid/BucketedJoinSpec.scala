@@ -36,8 +36,8 @@ class BucketedJoinSpec extends AnyFunSuite {
     FractionStore.writeBucketed(spark, qh,
       FractionStore.fractions(spark, qaRoot), "bk_qa", nBuckets = 8)
     try {
-      val joined = FractionStore.bucketedAlignedJoin(spark,
-        nh, "bk_ndvi", qh, "bk_qa", masks = Seq(true, false))
+      val joined = FractionStore.bucketedAlignedJoinN(spark,
+        Seq((nh, "bk_ndvi"), (qh, "bk_qa")), masks = Seq(true, false))
       assert(shuffleCount(joined) == 0,
         "bucketed chunk join must not exchange either side")
 

@@ -151,6 +151,50 @@ class FractionStoreSpec extends AnyFunSuite {
     assert(ts.toSeq == header.timestampsMs)
   }
 
+  test("aligned load rejects a chunk whose stores disagree on nd") {
+    // two int16 bands of 3 dates in chunks of 2 (tail chunk 1 holds one
+    // date); two dates appended to band "long" only grow its tail to 2
+    val h = GridHeader(name = "band", width = 20, height = 10,
+      fracWidth = 10, fracHeight = 5, fracNDates = 2, dtype = "int16",
+      srs = "wgs84", geot = Seq(0.0, 1.0, 0.0, 0.0, 0.0, -1.0),
+      timestampsMs = Seq(1L, 2L, 3L), nodata = -1.0)
+    val value = new SyntheticGrid.PixelFn {
+      def apply(x: Int, y: Int, t: Int): Double = (x * 7 + y * 3 + t) % 50
+    }
+    val (long, short) = (TestSpark.tmpDir("nd_long"), TestSpark.tmpDir("nd_short"))
+    SyntheticGrid.writeDirect(spark, h, long, value)
+    SyntheticGrid.writeDirect(spark, h, short, value)
+    val hl = IncrementalAppend.appendDates(spark, long, Seq(4L, 5L),
+      SyntheticGrid.pixelDf(spark, h.copy(timestampsMs = Seq(4L, 5L)),
+        (x, y, t) => (x + y + t).cast("double")))
+    // dates inside time chunk 0 still pair
+    assert(FractionStore.loadAlignedSliceXY(spark, Seq((h, short), (hl, long)),
+      0, 20, 0, 10, 0, 2, masks = Seq(false, false)).count() == 400)
+    for (stores <- Seq(Seq((h, short), (hl, long)), Seq((hl, long), (h, short)))) {
+      val err = intercept[Exception] {
+        FractionStore.loadAlignedSliceXY(spark, stores, 0, 20, 0, 10, 0, 3,
+          masks = Seq(false, false)).collect()
+      }
+      val msgs = TestSpark.messages(err)
+      assert(msgs.exists(m => m.contains("(frac_num, time_chunk) = (") &&
+        m.contains(", 1) at") && m.contains("10x5x1") && m.contains("10x5x2")),
+        msgs.mkString(" | "))
+    }
+  }
+
+  test("pixel view decodes each payload once per chunk") {
+    // an inferred size(arr) > 0 filter over an unpacked attribute would
+    // be pushed below the unpack projection with the decode inlined
+    def decodes(df: org.apache.spark.sql.DataFrame) =
+      "unpack_payload".r.findAllIn(df.queryExecution.optimizedPlan.toString).size
+    val (x0, x1, y0, y1, t0, t1) = (17, 40, 3, 12, 2, 11)
+    assert(decodes(FractionStore.loadSliceXY(spark, header, root,
+      x0, x1, y0, y1, t0, t1)) == 1)
+    assert(decodes(FractionStore.loadAlignedSliceXY(spark,
+      Seq((header, root), (header, root)), x0, x1, y0, y1, t0, t1,
+      masks = Seq(true, true))) == 2)
+  }
+
   test("fromPixels rejects a pixel outside the grid, naming it") {
     // 25 px wide, 10 px fractions: the last fraction column is 5 px wide,
     // so x = 27 keys to it and would index past its rows; x = -1 keys to

@@ -220,4 +220,41 @@ class GridPipelineSpec extends AnyFunSuite {
     assert(ChunkRows(spark, multiA) == want)
     assert(ChunkRows(spark, multiB).keySet == want.keySet)
   }
+
+  test("pipeline rejects inputs whose chunks disagree on nd") {
+    val ts = (0 until 5).map(i => 7000L + i)
+    def header(n: Int, dtype: String) = SyntheticGrid.miniModisNdviHeader
+      .copy(name = "in", timestampsMs = ts.take(n), dtype = dtype)
+    val ndvi = TestSpark.tmpDir("nd_ndvi")
+    val qa = TestSpark.tmpDir("nd_qa")
+    for ((root, value, dtype) <- Seq(
+        (ndvi, SyntheticGrid.ndviValue _, "int16"),
+        (qa, SyntheticGrid.qaValue _, "uint16"))) {
+      val h = header(3, dtype)
+      FractionStore.write(spark, h, FractionStore.fromPixels(spark, h,
+        SyntheticGrid.pixelDf(spark, h, value)), root)
+    }
+    // 2 dates appended to the NDVI store only: its tail chunk 1 grows to
+    // 2 dates while the QA store's still holds 1
+    IncrementalAppend.appendDates(spark, ndvi, ts.drop(3),
+      SyntheticGrid.pixelDf(spark, header(2, "int16"),
+        (x, y, t) => SyntheticGrid.ndviValue(x, y, t + lit(3))))
+    val ins = Seq(ndvi, qa).map(r => (GridHeader.load(spark, r), r))
+    val err = intercept[Exception] {
+      new GridPipeline(ins, ins.head._1.copy(name = "out"),
+        TestSpark.tmpDir("nd_out")).run(spark)((_, ps) => ps.head)
+    }
+    val msgs = TestSpark.messages(err)
+    assert(msgs.exists(m => m.contains("(frac_num, time_chunk) = (") &&
+      m.contains(", 1) at") && m.contains("50x50x2") && m.contains("50x50x1")),
+      msgs.mkString(" | "))
+
+    // inputs chunked differently in time are refused up front
+    val (qh, qr) = ins(1)
+    val rechunked = intercept[IllegalArgumentException] {
+      new GridPipeline(Seq(ins.head, (qh.copy(fracNDates = 3), qr)),
+        ins.head._1.copy(name = "out"), TestSpark.tmpDir("nd_out2"))
+    }
+    assert(rechunked.getMessage.contains("time chunking"))
+  }
 }

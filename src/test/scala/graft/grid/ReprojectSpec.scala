@@ -252,6 +252,30 @@ class ReprojectSpec extends AnyFunSuite {
     assert("unpack_payload".r.findAllIn(plan).size == 1, plan.take(2000))
   }
 
+  test("same-geogrid align keeps base pixels where a band lacks chunks (J1)") {
+    // a second band on the source geogrid without fraction 0 (pixels
+    // x < 10, y < 10) and a third without fraction 1 (10 <= x < 20)
+    val bands = Seq(0, 1).map { drop =>
+      val r = TestSpark.tmpDir(s"align_sparse_$drop")
+      FractionStore.write(spark, srcHeader,
+        FractionStore.fractions(spark, srcRoot).filter(col("frac_num") =!= drop), r)
+      (srcHeader.copy(name = s"sparse_$drop"), r)
+    }
+    val aligned = Reproject.alignOnFirst(spark, (srcHeader, srcRoot) +: bands,
+      0, 20, 0, 20)
+    val rows = aligned.collect()
+    assert(rows.length == 400)
+    rows.foreach { r =>
+      val (x, y) = (r.getAs[Int]("x"), r.getAs[Int]("y"))
+      val v = (x * 100 + y).toFloat
+      assert(r.getAs[Float]("value_0") == v)
+      Seq((1, x < 10 && y < 10), (2, x >= 10 && y < 10)).foreach { case (i, gone) =>
+        val got = Option(r.getAs[Any](s"value_$i"))
+        assert(got == (if (gone) None else Some(v)), s"value_$i at ($x, $y)")
+      }
+    }
+  }
+
   test("cross-SR align: sinusoidal grid warped onto wgs84 lattice (J1)") {
     // sinusoidal grid covering roughly the same small area near (0,0):
     // 0.01 deg ~ 1111.95 m at the equator
