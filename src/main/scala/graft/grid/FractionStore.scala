@@ -1,6 +1,10 @@
 package graft.grid
 
-import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Encoders, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -43,9 +47,11 @@ final case class FracRowBytes(
   *  - sparsity: an absent (frac, chunk) row is simply no row (jgrid3.py:22-23);
   *    reads materialize nodata/NULL at the pixel view (P9).
   *
-  * Fraction row schema:
-  *   frac_num int, time_chunk int, frac_x int, frac_y int,
-  *   x0 int, y0 int, t0 int, w int, h int, nd int, data binary
+  * Fraction row schema: [[FractionStore.chunkSchema]], declared once and
+  * passed to every store read (no Parquet schema inference, so planning
+  * a read runs no Spark job):
+  *   frac_num int, frac_x int, frac_y int, x0 int, y0 int, t0 int,
+  *   w int, h int, nd int, data binary, time_chunk int (partition)
   * where data is the packed native-dtype payload; the pixel view
   * surfaces int for integer dtypes, float/double for float dtypes.
   */
@@ -147,7 +153,7 @@ object FractionStore {
     */
   def compact(spark: SparkSession, root: String,
               timeChunks: Option[Seq[Int]] = None): (Long, Long) = {
-    val fs = new org.apache.hadoop.fs.Path(dataPath(root))
+    val fs = new Path(dataPath(root))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // count only the partitions being rewritten: a bounded maintenance
     // batch over a huge store must not pay a full-store recursive LIST
@@ -155,8 +161,8 @@ object FractionStore {
     def countFiles(): Long = {
       val dirs = timeChunks match {
         case Some(cs) => cs.map(c =>
-          new org.apache.hadoop.fs.Path(dataPath(root), s"time_chunk=$c"))
-        case None => Seq(new org.apache.hadoop.fs.Path(dataPath(root)))
+          new Path(dataPath(root), s"time_chunk=$c"))
+        case None => Seq(new Path(dataPath(root)))
       }
       var n = 0L
       dirs.filter(fs.exists).foreach { d =>
@@ -282,10 +288,52 @@ object FractionStore {
 
   // ---- read (SRC1/SRC3, P1-P3, P6-P7) ---------------------------------
 
+  /** The stored chunk schema: the [[FracRowBytes]] columns as the files
+    * hold them, then the `time_chunk` partition column — the column order
+    * Parquet schema inference gave, so positional callers see no change.
+    */
+  val chunkSchema: StructType = {
+    val (part, file) = Encoders.product[FracRowBytes].schema.fields
+      .map(_.copy(nullable = true)).partition(_.name == "time_chunk")
+    StructType(file ++ part)
+  }
+
   /** All available fraction rows (sparse listing is just the scan —
-    * SRC3, jgrid3.py:610-632). */
-  def fractions(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(dataPath(root))
+    * SRC3, jgrid3.py:610-632), read with the declared [[chunkSchema]].
+    *
+    * A declared-schema scan reads a column that a data file lacks as
+    * NULL, so one data file's footer is checked on the driver (a footer
+    * read, no Spark job): a store whose files lack a chunk column, or
+    * hold it with another type, fails here naming the store and the
+    * column. A file of the wrong type that this check does not open still
+    * fails its scan task (Parquet's type-mismatch error names the file
+    * and the column).
+    */
+  def fractions(spark: SparkSession, root: String): DataFrame = {
+    val rows = spark.read.schema(chunkSchema).parquet(dataPath(root))
+    rows.inputFiles.headOption.foreach(checkChunkColumns(spark, root, _))
+    rows
+  }
+
+  private def checkChunkColumns(spark: SparkSession, root: String,
+                                file: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(new Path(new java.net.URI(file)), conf),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val stored = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      .convert(footer.getFileMetaData.getSchema)
+      .fields.map(f => f.name -> f.dataType).toMap ++
+      (if (file.contains("/time_chunk=")) Map("time_chunk" -> IntegerType)
+       else Map.empty)
+    chunkSchema.fields.foreach { f =>
+      val found = stored.get(f.name)
+      require(found.contains(f.dataType), s"fraction store $root: " +
+        found.fold(s"chunk column '${f.name}' is missing")(t =>
+          s"chunk column '${f.name}' is ${t.simpleString}, expected " +
+            f.dataType.simpleString) + s" in data file $file")
+    }
+  }
 
   /** One-row catalog summary of a grid store — the header pretty-print
     * of the reference's worldgrid_info script
@@ -502,7 +550,7 @@ object FractionStore {
     // CTAS then refuses with LOCATION_ALREADY_EXISTS. Drop any catalog
     // entry, then clear an orphaned default location before writing.
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = new org.apache.hadoop.fs.Path(
+    val loc = new Path(
       spark.sessionState.catalog.defaultTablePath(
         org.apache.spark.sql.catalyst.TableIdentifier(table)))
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)

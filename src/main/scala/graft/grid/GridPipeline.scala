@@ -9,9 +9,11 @@ import org.apache.spark.sql.functions._
   *
   * Semantics preserved from the reference:
   *  - all inputs must share a geogrid (spark.py:146-153) and, beyond
-  *    the reference, a time chunking; their chunks are paired by the
-  *    one aligned join ([[FractionStore.alignedJoin]]), which fails a
-  *    chunk whose inputs disagree on `nd`;
+  *    the reference, a time chunking, which the outputs must declare
+  *    too (an output chunk keeps its input chunk's placement); input
+  *    chunks are paired by the one aligned join
+  *    ([[FractionStore.alignedJoin]]), which fails a chunk whose inputs
+  *    disagree on `nd`;
   *  - available = intersection of the inputs' chunk sets (J4, :166-167);
   *  - todo = available − already-written output chunks unless forceAll
   *    (J5 lazy resume, :171-177) — re-running a finished pipeline is a
@@ -181,8 +183,10 @@ final class GridMultiPipeline(
   require(inputs.forall(_._1.sharesChunking(inputs.head._1)),
     "all pipeline inputs must share a geogrid and time chunking " +
       "(hadoop/spark.py:146-153)")
-  require(outputs.forall(_._1.sameGeogrid(inputs.head._1)),
-    "output grids must share the inputs' geogrid")
+  // an output chunk keeps its input chunk's placement (time_chunk, t0,
+  // nd), so the output header must declare the inputs' time chunking too
+  require(outputs.forall(_._1.sharesChunking(inputs.head._1)),
+    "output grids must share the inputs' geogrid and time chunking")
 
   /** Run `fn` over every todo chunk; it returns one payload per output
     * grid (in `outputs` order). Returns the number of chunks computed. */

@@ -1,6 +1,12 @@
 package graft.grid
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 
@@ -214,5 +220,174 @@ class FractionStoreSpec extends AnyFunSuite {
       assert(msgs.exists(m => m.contains(s"pixel (x=$x, y=$y, t=0)") &&
         m.contains("25 x 10 px")), msgs.mkString("\n"))
     }
+  }
+
+  /** Spark jobs started from this thread while `body` runs. */
+  private def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"plan-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "planning")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.GraftMetricsBridge.flush(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("planning a store read, and header load/save, run no Spark job") {
+    val qh = header.copy(name = "tinyqa", dtype = "uint16", nodata = 65535.0)
+    val qaRoot = TestSpark.tmpDir("tinyqa")
+    FractionStore.write(spark, qh, FractionStore.fromPixels(spark, qh,
+      SyntheticGrid.pixelDf(spark, qh, (x, y, t) =>
+        ((x + y + t) % 4 * 4).cast("double"))), qaRoot)
+    def planned(df: => DataFrame): Int = jobsDuring(df.queryExecution.executedPlan)
+    assert(planned(FractionStore.loadSliceXY(spark, header, root,
+      17, 40, 3, 12, 2, 11)) == 0)
+    assert(planned(GridKernels.maskedMeanByT(spark, (header, root),
+      (qh, qaRoot), 17, 40, 3, 12, 3, 6)) == 0)
+    assert(planned(graft.plans.LatLngPruning.withGeoColumns(header,
+      FractionStore.fractions(spark, root)).filter(col("t") === 0)) == 0)
+    assert(jobsDuring(GridHeader.load(spark, root)) == 0)
+    assert(jobsDuring(qh.save(spark, qaRoot)) == 0)
+  }
+
+  test("the declared chunk schema is the schema Parquet infers for a store") {
+    assert(spark.read.parquet(FractionStore.dataPath(root)).schema ==
+      FractionStore.chunkSchema)
+    assert(FractionStore.fractions(spark, root).schema == FractionStore.chunkSchema)
+  }
+
+  test("a store whose files lack a chunk column, or hold it with another " +
+    "type, fails naming the store and the column") {
+    for ((name, broken, want) <- Seq[(String, DataFrame => DataFrame, String)](
+        ("no_frac_x", _.drop("frac_x"), "chunk column 'frac_x' is missing"),
+        ("long_nd", _.withColumn("nd", col("nd").cast("long")),
+          "chunk column 'nd' is bigint, expected int"))) {
+      val r = TestSpark.tmpDir(name)
+      header.save(spark, r)
+      broken(FractionStore.fractions(spark, root))
+        .write.partitionBy("time_chunk").parquet(FractionStore.dataPath(r))
+      val err = intercept[IllegalArgumentException] {
+        FractionStore.loadSliceXY(spark, header, r, 0, 19, 0, 5, 0, 3).collect()
+      }
+      assert(err.getMessage.contains(s"fraction store $r") &&
+        err.getMessage.contains(want), err.getMessage)
+    }
+  }
+
+  // header.json records as Spark's JSON writer (Dataset.write.json) wrote
+  // them: one line each, non-finite doubles quoted
+  private val sparkWrittenHeaders = Seq(
+    """{"name":"band","width":20,"height":10,"fracWidth":10,"fracHeight":5,""" +
+      """"fracNDates":2,"dtype":"int16","srs":"wgs84",""" +
+      """"geot":[0.0,1.0,0.0,0.0,0.0,-1.0],"timestampsMs":[1,2,3],""" +
+      """"nodata":-1.0}""" + "\n" ->
+      GridHeader(name = "band", width = 20, height = 10, fracWidth = 10,
+        fracHeight = 5, fracNDates = 2, dtype = "int16", srs = "wgs84",
+        geot = Seq(0.0, 1.0, 0.0, 0.0, 0.0, -1.0),
+        timestampsMs = Seq(1L, 2L, 3L), nodata = -1.0),
+    """{"name":"band","width":20,"height":10,"fracWidth":10,"fracHeight":5,""" +
+      """"fracNDates":2,"dtype":"float32","srs":"sinusoidal",""" +
+      """"geot":[-1.0E7,231.656358,0.0,5559752.598,0.0,-231.656358],""" +
+      """"timestampsMs":[1356998400000,1358380800000],"nodata":"NaN"}""" +
+      "\n" ->
+      GridHeader(name = "band", width = 20, height = 10, fracWidth = 10,
+        fracHeight = 5, fracNDates = 2, dtype = "float32", srs = "sinusoidal",
+        geot = Seq(-1.0e7, 231.656358, 0.0, 5559752.598, 0.0, -231.656358),
+        timestampsMs = Seq(1356998400000L, 1358380800000L),
+        nodata = Double.NaN))
+
+  private val sparkPartName =
+    "part-00000-0e4b4ec9-a6e7-4a6f-a479-195320676ca9-c000.json"
+
+  /** A store root whose header.json directory holds `files` (name ->
+    * content), written through the checksummed local FileSystem as
+    * Spark's writer did (each file gets a `.crc` sidecar). */
+  private def headerDir(files: (String, String)*): String = {
+    val r = TestSpark.tmpDir("header")
+    val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(new Path(r, "header.json"))
+    files.foreach { case (name, content) =>
+      val out = fs.create(new Path(new Path(r, "header.json"), name))
+      try out.write(content.getBytes(UTF_8)) finally out.close()
+    }
+    r
+  }
+
+  private def partFiles(root: String): Seq[String] =
+    Paths.get(root, "header.json").toFile.list().toSeq
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted
+
+  /** Equality that holds for a NaN nodata too. */
+  private def sameHeader(a: GridHeader, b: GridHeader): Boolean =
+    a.copy(nodata = 0) == b.copy(nodata = 0) &&
+      java.lang.Double.compare(a.nodata, b.nodata) == 0
+
+  test("header files written by Spark's JSON writer load unchanged; the " +
+    "writer keeps their bytes, NaN nodata included") {
+    for ((record, want) <- sparkWrittenHeaders) {
+      val r = headerDir(sparkPartName -> record, "_SUCCESS" -> "")
+      val got = GridHeader.load(spark, r)
+      assert(sameHeader(got, want), got)
+      got.save(spark, r)
+      assert(partFiles(r) == Seq(sparkPartName))
+      assert(new String(Files.readAllBytes(Paths.get(r, "header.json",
+        sparkPartName)), UTF_8) == record)
+      // the replaced part's checksum sidecar is gone, not stale
+      assert(sameHeader(GridHeader.load(spark, r), want))
+    }
+    val fresh = TestSpark.tmpDir("header_nan")
+    sparkWrittenHeaders(1)._2.save(spark, fresh)
+    assert(sameHeader(GridHeader.load(spark, fresh), sparkWrittenHeaders(1)._2))
+  }
+
+  test("header load fails naming the path: no record, several part " +
+    "files, several lines") {
+    val record = sparkWrittenHeaders.head._1
+    for ((r, want) <- Seq(
+        headerDir() -> "holds no record",
+        headerDir("_SUCCESS" -> "", "part-00000.json" -> "") -> "holds no record",
+        headerDir("part-00000.json" -> record, "part-00001.json" -> record) ->
+          "holds 2 part files",
+        headerDir("part-00000.json" -> (record + record)) -> "holds 2 lines")) {
+      val err = intercept[IllegalArgumentException](GridHeader.load(spark, r))
+      assert(err.getMessage.contains(s"$r/header.json") &&
+        err.getMessage.contains(want), err.getMessage)
+    }
+  }
+
+  test("header save renames a temp file into place: a concurrent reader " +
+    "sees the old header or the new one") {
+    val a = sparkWrittenHeaders.head._2
+    val b = a.copy(timestampsMs = Seq(1L, 2L, 3L, 4L))
+    val r = headerDir("_tmp-left-by-a-crashed-save.json" -> "{\"name\":")
+    a.save(spark, r)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val writer = new Thread(() =>
+      try (0 until 200).foreach(i => (if (i % 2 == 0) b else a).save(spark, r))
+      catch { case e: Throwable => failure.set(e) })
+    writer.start()
+    var reads = 0
+    while (writer.isAlive || reads == 0) {
+      val got = GridHeader.load(spark, r)
+      assert(got == a || got == b, got)
+      reads += 1
+    }
+    writer.join()
+    assert(failure.get == null, String.valueOf(failure.get))
+    assert(GridHeader.load(spark, r) == a)
+    assert(partFiles(r) == Seq("part-00000.json"))
+    // no temp file of these saves is left; the record has no sidecar
+    assert(Paths.get(r, "header.json").toFile.list().toSeq.sorted ==
+      Seq("._tmp-left-by-a-crashed-save.json.crc",
+        "_tmp-left-by-a-crashed-save.json", "part-00000.json"))
   }
 }

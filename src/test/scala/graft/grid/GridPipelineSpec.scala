@@ -257,4 +257,16 @@ class GridPipelineSpec extends AnyFunSuite {
     }
     assert(rechunked.getMessage.contains("time chunking"))
   }
+
+  test("pipeline rejects an output header chunked differently in time") {
+    // the output chunks keep the input's placement (2 dates per time
+    // chunk); under a header declaring 1 date per chunk, window loads
+    // would prune the wrong time chunks (0 of 40,000 pixels over t [3, 4))
+    val h = GridHeader.load(spark, ndviRoot)
+    val err = intercept[IllegalArgumentException] {
+      new GridPipeline(Seq((h, ndviRoot)), h.copy(name = "out", fracNDates = 1),
+        TestSpark.tmpDir("rechunked_out")).run(spark)((_, ps) => ps.head)
+    }
+    assert(err.getMessage.contains("time chunking"), err.getMessage)
+  }
 }
