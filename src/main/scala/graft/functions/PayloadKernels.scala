@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
-import graft.grid.PayloadCodec
+import graft.grid.{PayloadCodec, RegionIntervals}
 
 /** Fused chunk-payload kernels: decode + map + reduce in ONE call per
   * chunk row, never materializing the pixel rows.
@@ -28,10 +28,10 @@ import graft.grid.PayloadCodec
   *
   * Two expressions carry every kernel: [[QaConfStatsExpr]] folds a whole
   * QA payload, and [[ChunkKernelExpr]] runs one windowed [[ChunkKernel]]
-  * (box stats, QA-masked box stats, per-pixel trend, per-pixel CUSUM)
-  * over a chunk row's payloads and geometry. A kernel supplies only its
-  * per-chunk fold; the payload-size check and the chunk∩window clip
-  * ([[ChunkWindow]]) are shared.
+  * (box stats, QA-masked box stats, per-pixel trend, per-pixel CUSUM,
+  * per-region zonal stats) over a chunk row's payloads and geometry. A
+  * kernel supplies only its per-chunk fold; the payload-size check and
+  * the chunk∩window clip ([[ChunkWindow]]) are shared.
   *
   * The speedup is RECORDED, not claimed: Bench times the exploded and
   * fused paths back-to-back in the same process (the
@@ -138,6 +138,10 @@ object ChunkKernel {
   val trendSchema: StructType = schema(
     ("x", IntegerType, false), ("y", IntegerType, false),
     ("n", LongType, false), ("slope", DoubleType, false))
+  val zonalSchema: StructType = schema(
+    ("region", IntegerType, false), ("t", IntegerType, false),
+    ("sum_v", DoubleType, false), ("n_valid", LongType, false),
+    ("min_v", DoubleType, true), ("max_v", DoubleType, true))
   val cusumSchema: StructType = schema(
     ("x", IntegerType, false), ("y", IntegerType, false),
     ("t", IntegerType, false), ("cusum", DoubleType, false),
@@ -389,6 +393,94 @@ final case class Cusum(vCode: Int, box: Box, nodata: Double, trainT: Int,
       ly += 1
     }
     out.toArray
+  }
+}
+
+/** Per-(region, date) statistics of one value payload over the regions
+  * of a [[RegionIntervals]] table — the fused form of "window load ->
+  * per-pixel containment -> explode on membership -> groupBy(region, t)".
+  * The box is the table's window x [tFrom, tTo); each chunk visits only
+  * the table rows and intervals inside its clip, so the fold reads each
+  * covered pixel-date once per region holding it and tests no pixel.
+  *
+  * Entries: struct(region int, t int, sum_v double, n_valid long,
+  * min_v double?, max_v double?), one per region with at least one
+  * pixel in the clip and per chunk-local date in the clip (an all-nodata
+  * group appears with n_valid 0): sum_v/n_valid/min/max aggregate values
+  * != nodata; min_v/max_v are NULL when n_valid is 0. min/max order NaN
+  * above every number, as Spark's min()/max() do.
+  */
+final case class ZonalStats(vCode: Int, regions: RegionIntervals,
+                            tFrom: Int, tTo: Int, nodata: Double)
+    extends ChunkKernel {
+  def name: String = "zonal_stats"
+  def box: Box = Box(regions.x0, regions.x1, regions.y0, regions.y1, tFrom, tTo)
+  def codes: Seq[Int] = Seq(vCode)
+  def entrySchema: StructType = ChunkKernel.zonalSchema
+
+  protected def fold(c: ChunkWindow, payloads: Array[Array[Byte]]): Array[Any] = {
+    import c._
+    import regions.{rowStart, region, xFrom, xTo}
+    val (gxFrom, gxTo) = (x0 + lxFrom, x0 + lxTo)
+    def rowOf(ly: Int) = y0 + ly - regions.y0
+    // the regions with a pixel in the clip, ascending: their slots
+    val hit = new scala.collection.mutable.ArrayBuilder.ofInt
+    var ly = lyFrom
+    while (ly < lyTo) {
+      var e = rowStart(rowOf(ly))
+      while (e < rowStart(rowOf(ly) + 1)) {
+        if (math.max(xFrom(e), gxFrom) < math.min(xTo(e), gxTo)) hit += region(e)
+        e += 1
+      }
+      ly += 1
+    }
+    val slots = hit.result().sorted.distinct
+    if (slots.isEmpty) return Array.empty[Any]
+    val nt = ltTo - ltFrom
+    val sums = new Array[Double](slots.length * nt)
+    val valid = new Array[Long](slots.length * nt)
+    val mins = Array.fill(slots.length * nt)(Double.NaN)
+    val maxs = Array.fill(slots.length * nt)(Double.NegativeInfinity)
+    val decoded = PayloadCodec.decodeDouble(payloads(0), vCode)
+    ly = lyFrom
+    while (ly < lyTo) {
+      var e = rowStart(rowOf(ly))
+      while (e < rowStart(rowOf(ly) + 1)) {
+        val xEnd = math.min(xTo(e), gxTo)
+        var x = math.max(xFrom(e), gxFrom)
+        if (x < xEnd) {
+          val slot0 = java.util.Arrays.binarySearch(slots, region(e)) * nt
+          while (x < xEnd) {
+            val base = (ly * w + x - x0) * nd
+            var lt = ltFrom
+            while (lt < ltTo) {
+              val value = decoded(base + lt)
+              if (value != nodata) {
+                val k = slot0 + lt - ltFrom
+                sums(k) += value
+                valid(k) += 1
+                if (mins(k).isNaN || value < mins(k)) mins(k) = value
+                if (value > maxs(k) || value.isNaN) maxs(k) = value
+              }
+              lt += 1
+            }
+            x += 1
+          }
+        }
+        e += 1
+      }
+      ly += 1
+    }
+    val rows = new Array[Any](slots.length * nt)
+    var k = 0
+    while (k < rows.length) {
+      val (mn, mx): (Any, Any) =
+        if (valid(k) > 0) (mins(k), maxs(k)) else (null, null)
+      rows(k) = new GenericInternalRow(Array[Any](slots(k / nt),
+        t0 + ltFrom + k % nt, sums(k), valid(k), mn, mx))
+      k += 1
+    }
+    rows
   }
 }
 

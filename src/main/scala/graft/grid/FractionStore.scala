@@ -457,10 +457,11 @@ object FractionStore {
     val exploded = unpacked.select(geometry ++
       headers.indices.drop(1).map(i => col(s"arr_$i")) :+
       posexplode(unpack(headers.head, col("data_0"))).as(Seq("pos", "value_0")): _*)
-      .withColumn("pix", expr("pos div nd").cast("int"))
-      .withColumn("x", col("x0") + col("pix") % col("w"))
-      .withColumn("y", col("y0") + expr("pix div w").cast("int"))
-      .withColumn("t", col("t0") + col("pos") % col("nd"))
+    // one projection (each withColumn would re-analyze the growing plan)
+    val pix = expr("pos div nd").cast("int")
+    val xyt = Seq((col("x0") + pix % col("w")).as("x"),
+      (col("y0") + expr("cast(pos div nd as int) div w").cast("int")).as("y"),
+      (col("t0") + col("pos") % col("nd")).as("t"))
     val values = headers.zip(masks).zipWithIndex.map { case ((h, mask), i) =>
       val raw = if (i == 0) col("value_0")
                 else element_at(col(s"arr_$i"), col("pos") + 1)
@@ -469,8 +470,7 @@ object FractionStore {
       else raw
       v.as(s"value_$i")
     }
-    exploded.select(chunkCols.map(col) ++ Seq(col("x"), col("y"), col("t")) ++
-      values: _*)
+    exploded.select(chunkCols.map(col) ++ xyt ++ values: _*)
   }
 
   /** Explode fraction rows to the relational pixel view

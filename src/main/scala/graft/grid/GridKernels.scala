@@ -25,7 +25,7 @@ object GridKernels {
     * with the one aligned join ([[FractionStore.alignedJoin]]: shared
     * geogrid + time chunking, matching `nd` per chunk), run the kernel
     * once per chunk row and explode its entries into column `s`. */
-  private def scan(spark: SparkSession, stores: Seq[(GridHeader, String)],
+  private[grid] def scan(spark: SparkSession, stores: Seq[(GridHeader, String)],
                    kernel: ChunkKernel): DataFrame = {
     val b = kernel.box
     FractionStore.alignedJoin(stores.map { case (header, root) =>

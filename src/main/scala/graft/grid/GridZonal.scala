@@ -3,55 +3,68 @@ package graft.grid
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.ZonalStats
+
 /** Zonal statistics per NAMED REGION (the polygon-table complement of
   * the per-class zonal stats): NDVI means per administrative district,
   * per protected area, per field boundary — the reference's
   * notebook-side loop of `load_poly_latlng` calls collapsed into ONE
   * distributed pass.
   *
-  * Membership is pixel-center ray-cast containment per region (the
-  * same native codegen [[graft.functions.PointInPolygonExpr]] as P5); a
-  * pixel inside k overlapping regions contributes to all k (explode on
-  * the membership array — standard zonal semantics). One scan over the
-  * union-bbox window, one partial-agg shuffle on (region, t).
+  * Membership is scan-converted once on the driver, the way Raptor
+  * (VLDB 2019) joins a vector layer with a raster: every region's ring
+  * becomes per-row pixel intervals ([[RegionIntervals]]), exactly the
+  * pixel centres the ray cast of [[graft.functions.PointInPolygonExpr]]
+  * (P5's mask) puts inside it. The table travels as a plan-time
+  * constant of the [[ZonalStats]] chunk kernel, which folds each chunk's
+  * payload along the intervals that cross it: no pixel rows and no
+  * per-pixel containment test, so a chunk's fold reads each covered
+  * pixel-date once per region holding it, however many regions the
+  * table holds. A pixel inside k
+  * overlapping regions contributes to all k (standard zonal semantics).
+  * One scan over the union-bbox window, one partial-agg shuffle on
+  * (region, t).
   *
-  * Scope: the region set is driver-literal (polygon rings compile into
-  * the codegen predicate), the right shape for bounded region tables
-  * (countries, districts, a protected-area list). A million-polygon
-  * layer would instead bbox-bucket the polygons and broadcast-join
-  * buckets — out of scope here.
+  * Scope: the table is built on the driver and shipped with every task,
+  * so its size (one entry per region per pixel row it spans) bounds the
+  * region set; `SCALING.md` records the cost from 10 to 100k polygons.
   */
 object GridZonal {
 
-  /** Per-(region, date) stats over `regions` (name -> (lat, lng) ring).
-    * Emits (region, t, n_valid, mean_value, min_value, max_value). */
+  /** Per-(region, date) stats over `regions` (name -> (lat, lng) ring;
+    * names must be unique). Emits (region, t, n_valid, mean_value,
+    * min_value, max_value): one row per region and date with at least
+    * one stored pixel of the region in the window; n_valid counts its
+    * non-nodata values, and mean/min/max are NULL when there is none. */
   def zonalByRegion(spark: SparkSession, header: GridHeader, root: String,
                     regions: Seq[(String, Array[(Double, Double)])],
                     tFrom: Int, tTo: Int): DataFrame = {
     require(regions.nonEmpty, "need at least one region")
-    regions.foreach { case (name, ring) =>
-      require(ring.nonEmpty, s"region '$name' has an empty ring")
-    }
+    val names = regions.map(_._1)
+    val repeated = names.diff(names.distinct).distinct
+    require(repeated.isEmpty, "region names must be unique; repeated: " +
+      repeated.map(n => s"'$n'").mkString(", "))
     val xyPolys = regions.map { case (name, ring) =>
-      (name, ring.map { case (lat, lng) => header.latLngToXY(lat, lng) })
+      require(ring.length >= 3,
+        s"region '$name' needs a ring of at least 3 vertices, got ${ring.length}")
+      val xy = ring.map { case (lat, lng) => header.latLngToXY(lat, lng) }
+      require(xy.forall { case (x, y) => x.isFinite && y.isFinite },
+        s"region '$name' has a vertex with no finite pixel position")
+      xy
     }
     // the union bbox, clamped to the grid: a region set fully outside
     // the grid yields an empty window, hence zero rows
-    val (x0, x1, y0, y1) = header.pixelBox(xyPolys.flatMap(_._2))
-    val df = FractionStore.loadSliceXY(spark, header, root,
-      x0, x1, y0, y1, tFrom, tTo)
-    val members = xyPolys.map { case (name, poly) =>
-      when(graft.functions.PointInPolygonExpr(poly,
-        col("x").cast("double") + lit(0.5),
-        col("y").cast("double") + lit(0.5)), lit(name))
-    }
-    df.withColumn("region", explode(array_compact(array(members: _*))))
-      .groupBy(col("region"), col("t"))
-      .agg(count(col("value")).as("n_valid"),
-        (sum(col("value").cast("double")) / count(col("value")))
-          .as("mean_value"),
-        min(col("value")).cast("double").as("min_value"),
-        max(col("value")).cast("double").as("max_value"))
+    val (x0, x1, y0, y1) = header.pixelBox(xyPolys.flatten)
+    val kernel = ZonalStats(PayloadCodec.code(header.dtype),
+      RegionIntervals(xyPolys, x0, x1, y0, y1), tFrom, tTo, header.nodata)
+    GridKernels.scan(spark, Seq((header, root)), kernel)
+      .groupBy(col("s.region").as("r"), col("s.t").as("t"))
+      .agg(sum(col("s.sum_v")).as("sv"), sum(col("s.n_valid")).as("nv"),
+        min(col("s.min_v")).as("min_v"), max(col("s.max_v")).as("max_v"))
+      .select(element_at(typedLit(names), col("r") + 1).as("region"),
+        col("t"), col("nv").as("n_valid"),
+        when(col("nv") > 0, col("sv") / col("nv")).as("mean_value"),
+        col("min_v").as("min_value"), col("max_v").as("max_value"))
   }
 
   /** Per-class AREA statistics (the land-cover area product: km² of
@@ -179,5 +192,110 @@ object GridZonal {
         classOf(col("vb")).as("cls_to"))
       .groupBy(col("cls_from"), col("cls_to"))
       .agg(count(lit(1)).as("n_px"))
+  }
+}
+
+/** Region membership of a pixel window as per-row pixel intervals: a
+  * set of rings scan-converted once, on the driver. Row y of
+  * [y0, y1) owns entries `rowStart(y - y0) until rowStart(y - y0 + 1)`,
+  * ordered by region; entry e puts pixels [xFrom(e), xTo(e)) of that row,
+  * inside [x0, x1), in ring `region(e)`.
+  *
+  * Membership is the ray cast of [[graft.functions.PointInPolygonExpr]]
+  * at pixel centres, bit for bit. For row y the centre line is
+  * py = y + 0.5; each edge crossing it under the same predicate and the
+  * same arithmetic, `(yi > py) != (yj > py)` and
+  * `(xs(j) - xs(i)) * (py - yi) / (yj - yi) + xs(i)`, yields a crossing
+  * c. The ray cast counts the crossings right of px = x + 0.5; the count
+  * of a closed ring is even, so with the crossings sorted, px is inside
+  * exactly when c(2m) <= px < c(2m+1) for some m. The interval ends are
+  * found by evaluating that comparison, so the even-odd rule carries
+  * over unchanged to overlapping, touching and self-intersecting rings.
+  */
+final class RegionIntervals private (
+    val x0: Int, val x1: Int, val y0: Int, val y1: Int, val nRegions: Int,
+    val rowStart: Array[Int], val region: Array[Int],
+    val xFrom: Array[Int], val xTo: Array[Int]) extends Serializable {
+
+  /** Short on purpose: plan strings print the kernel that carries the
+    * table. */
+  override def toString: String =
+    s"RegionIntervals($nRegions regions, x [$x0, $x1), y [$y0, $y1), " +
+      s"${region.length} intervals)"
+}
+
+object RegionIntervals {
+
+  /** Scan-convert `rings` ((x, y) pixel-space vertices, closing vertex
+    * optional) over the window [x0, x1) x [y0, y1). Each ring visits
+    * only the rows its vertical extent can cross. */
+  def apply(rings: Seq[Array[(Double, Double)]],
+            x0: Int, x1: Int, y0: Int, y1: Int): RegionIntervals = {
+    val rowsB, regionsB, fromsB, tosB = new scala.collection.mutable.ArrayBuilder.ofInt
+    var cross = new Array[Double](16)
+    rings.zipWithIndex.foreach { case (ring, r) =>
+      val xs = ring.map(_._1)
+      val ys = ring.map(_._2)
+      // the rows whose centre line some edge can cross: min <= py < max
+      var y = firstCentreAtOrAbove(ys.min, y0, math.max(y0, y1))
+      val yEnd = firstCentreAtOrAbove(ys.max, y0, math.max(y0, y1))
+      while (y < yEnd) {
+        val py = y + 0.5
+        var k = 0
+        var i = 0
+        var j = xs.length - 1
+        while (i < xs.length) {
+          val yi = ys(i); val yj = ys(j)
+          if ((yi > py) != (yj > py)) {
+            if (k == cross.length) cross = java.util.Arrays.copyOf(cross, 2 * k)
+            cross(k) = (xs(j) - xs(i)) * (py - yi) / (yj - yi) + xs(i)
+            k += 1
+          }
+          j = i
+          i += 1
+        }
+        java.util.Arrays.sort(cross, 0, k)
+        var m = 0
+        while (m + 1 < k) {
+          val from = firstCentreAtOrAbove(cross(m), x0, math.max(x0, x1))
+          val to = firstCentreAtOrAbove(cross(m + 1), x0, math.max(x0, x1))
+          if (from < to) {
+            rowsB += y; regionsB += r; fromsB += from; tosB += to
+          }
+          m += 2
+        }
+        y += 1
+      }
+    }
+    val (rows, regions, froms, tos) =
+      (rowsB.result(), regionsB.result(), fromsB.result(), tosB.result())
+    // counting sort by row; stable, so each row stays ordered by region
+    val nRows = math.max(0, y1 - y0)
+    val rowStart = new Array[Int](nRows + 1)
+    var e = 0
+    while (e < rows.length) { rowStart(rows(e) - y0 + 1) += 1; e += 1 }
+    var k = 0
+    while (k < nRows) { rowStart(k + 1) += rowStart(k); k += 1 }
+    val next = java.util.Arrays.copyOf(rowStart, nRows)
+    val (region, xFrom, xTo) = (new Array[Int](rows.length),
+      new Array[Int](rows.length), new Array[Int](rows.length))
+    e = 0
+    while (e < rows.length) {
+      val at = next(rows(e) - y0)
+      next(rows(e) - y0) += 1
+      region(at) = regions(e); xFrom(at) = froms(e); xTo(at) = tos(e)
+      e += 1
+    }
+    new RegionIntervals(x0, x1, y0, y1, rings.length, rowStart, region,
+      xFrom, xTo)
+  }
+
+  /** The first pixel index v in [lo, hi) whose centre v + 0.5 is >= c,
+    * or hi: a rounded guess, settled by that comparison itself. */
+  private def firstCentreAtOrAbove(c: Double, lo: Int, hi: Int): Int = {
+    var v = math.min(hi.toDouble, math.max(lo.toDouble, math.ceil(c - 0.5))).toInt
+    while (v > lo && (v - 1) + 0.5 >= c) v -= 1
+    while (v < hi && v + 0.5 < c) v += 1
+    v
   }
 }

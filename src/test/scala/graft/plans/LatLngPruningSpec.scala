@@ -95,6 +95,83 @@ class LatLngPruningSpec extends AnyFunSuite {
     assert(fyHi.exists(v => v == 3), s"frac_y upper: $fyHi in $s")
   }
 
+  /** The tiny-grid lat/lng box with `t` bounded in the same filter. */
+  private def timeQuery(t: org.apache.spark.sql.Column) = geoView
+    .filter(col("lat").between(-0.4, -0.1) && col("lng").between(0.1, 0.5) && t)
+
+  private def partitionFilters(df: org.apache.spark.sql.DataFrame): String = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    GraftColumnBridge.ofRows(spark, LatLngPruning.Rule(df.queryExecution.analyzed))
+      .queryExecution.executedPlan.collectLeaves().collect {
+        case s: FileSourceScanExec => s.partitionFilters.mkString(";")
+      }.mkString(";")
+  }
+
+  test("rule lands a time_chunk range on the scan's PartitionFilters") {
+    // tiny grid: 3 dates per time chunk, so t in [4, 7] -> chunks [1, 2]
+    val s = partitionFilters(timeQuery(col("t").between(4, 7)))
+    assert("time_chunk#\\d+ >= 1".r.findFirstIn(s).nonEmpty, s"lower: $s")
+    assert("time_chunk#\\d+ <= 2".r.findFirstIn(s).nonEmpty, s"upper: $s")
+    val eq = partitionFilters(timeQuery(col("t") === 5))
+    assert("time_chunk#\\d+ >= 1".r.findFirstIn(eq).nonEmpty &&
+      "time_chunk#\\d+ <= 1".r.findFirstIn(eq).nonEmpty, s"t = 5: $eq")
+  }
+
+  test("time pruning preserves results, strict and non-strict bounds") {
+    val t = col("t")
+    for (cond <- Seq(t.between(4, 7), t >= 3 && t <= 5, t > 2 && t < 6,
+        t > 5, t < 3, lit(6) > t, lit(2) <= t, t === 3, t > 9, t > 4 && t < 4)) {
+      val q = timeQuery(cond)
+      val without = q.select("x", "y", "t", "value").collect().toSet
+      val got = GraftColumnBridge.ofRows(spark,
+          LatLngPruning.Rule(q.queryExecution.analyzed))
+        .select("x", "y", "t", "value").collect().toSet
+      assert(got == without, s"$cond")
+      assert(partitionFilters(q).contains("time_chunk"), s"$cond")
+    }
+  }
+
+  test("a t bound in a filter of its own prunes time_chunk too") {
+    // `query` stacks the lat/lng box and t = 0 as two filters
+    val s = partitionFilters(query)
+    assert("time_chunk#\\d+ >= 0".r.findFirstIn(s).nonEmpty &&
+      "time_chunk#\\d+ <= 0".r.findFirstIn(s).nonEmpty, s)
+  }
+
+  private def sameWithRule(q: org.apache.spark.sql.DataFrame): Unit = {
+    val without = q.collect().toSet
+    val got = GraftColumnBridge.ofRows(spark,
+      LatLngPruning.Rule(q.queryExecution.analyzed)).collect().toSet
+    assert(got == without && without.nonEmpty)
+  }
+
+  test("a recomputed t bounds no time chunk") {
+    // the new t is stored t - 3: t <= 2 keeps stored dates 3..5 (chunk 1)
+    val q = geoView.withColumn("t", col("t") - 3)
+      .filter(col("lat").between(-0.4, -0.1) && col("lng").between(0.1, 0.5) &&
+        col("t") <= 2)
+    sameWithRule(q.select("x", "y", "t", "value"))
+    assert(!partitionFilters(q).contains("time_chunk"), partitionFilters(q))
+  }
+
+  test("a t of another table in a join bounds no time chunk") {
+    import spark.implicits._
+    val other = Seq(5, 6, 7).toDF("t")
+    val q = geoView.drop("t").crossJoin(other)
+      .filter(col("lat").between(-0.4, -0.1) && col("lng").between(0.1, 0.5) &&
+        col("t") >= 5)
+    sameWithRule(q.groupBy(col("t")).agg(count(lit(1)).as("n")))
+    assert(!partitionFilters(q).contains("time_chunk"), partitionFilters(q))
+  }
+
+  test("a column renamed to an axis name bounds nothing") {
+    // `lat` here holds lng values; the lng metadata it carries is ignored
+    val q = geoView.drop("lat").withColumnRenamed("lng", "lat")
+      .filter(col("lat").between(0.1, 0.5))
+    val out = LatLngPruning.Rule(q.queryExecution.analyzed)
+    assert(out == q.queryExecution.analyzed)
+  }
+
   test("without geo metadata the rule is a no-op") {
     import spark.implicits._
     val plain = Seq((1.0, 2.0)).toDF("lat", "lng")
