@@ -592,22 +592,20 @@ object FractionStore {
     loadSliceXY(spark, header, root, x0, x1, y0, y1, tFrom, tTo)
   }
 
-  /** Polygon load (P5, jgrid/utils.py:27-51): bbox prune + per-pixel
-    * ray-cast containment mask, all inside codegen. Polygon vertices are
-    * WGS84 (lat, lng); mask column `in_poly` mirrors the reference's bool
-    * mask pairing.
+  /** Polygon load (P5, jgrid/utils.py:27-51): bbox prune + containment
+    * mask. Polygon vertices are WGS84 (lat, lng); mask column `in_poly`
+    * mirrors the reference's bool mask pairing and is a lookup in the
+    * polygon's [[RegionIntervals]] table over the window.
     */
   def loadPolyLatLng(spark: SparkSession, header: GridHeader, root: String,
                      poly: Array[(Double, Double)],
                      tFrom: Int, tTo: Int): DataFrame = {
-    val xyPoly = poly.map { case (lat, lng) => header.latLngToXY(lat, lng) }
+    val xyPoly = RegionIntervals.pixelRing(header, "polygon", poly)
     val (x0, x1, y0, y1) = header.pixelBox(xyPoly)
-    val df = loadSliceXY(spark, header, root, x0, x1, y0, y1, tFrom, tTo)
-    // pixel-center containment, like rasterization of the xy-projected
-    // poly; native loop expression keeps codegen O(1) in vertex count
-    df.withColumn("in_poly",
-      graft.functions.PointInPolygonExpr(xyPoly,
-        col("x").cast("double") + lit(0.5), col("y").cast("double") + lit(0.5)))
+    val table = RegionIntervals(Seq(xyPoly), x0, x1, y0, y1)
+    loadSliceXY(spark, header, root, x0, x1, y0, y1, tFrom, tTo)
+      .withColumn("in_poly",
+        graft.functions.RegionAtExpr(table, col("x"), col("y")) >= 0)
   }
 
   /** Attach the time axis (ts epoch millis) to a pixel view — W1 support. */

@@ -48,15 +48,6 @@ object GeoTransform {
 
   // ---- Column forms (codegen'd, no UDF) --------------------------------
 
-  def pixelToGeoX(geot: Array[Double], x: Column): Column =
-    lit(geot(0)) + x * lit(geot(1))
-  def pixelToGeoY(geot: Array[Double], y: Column): Column =
-    lit(geot(3)) + y * lit(geot(5))
-  def geoToPixelX(geot: Array[Double], gx: Column): Column =
-    (gx - lit(geot(0))) / lit(geot(1))
-  def geoToPixelY(geot: Array[Double], gy: Column): Column =
-    (gy - lit(geot(3))) / lit(geot(5))
-
   def latLngToSinuX(lat: Column, lng: Column): Column =
     lit(SinusoidalRadius) * radians(lng) * cos(radians(lat))
   def latLngToSinuY(lat: Column): Column =
@@ -64,57 +55,4 @@ object GeoTransform {
   def sinuToLat(sy: Column): Column = degrees(sy / lit(SinusoidalRadius))
   def sinuToLng(sx: Column, sy: Column): Column =
     degrees(sx / (lit(SinusoidalRadius) * cos(sy / lit(SinusoidalRadius))))
-}
-
-/** Ray-casting point-in-polygon (reference: F8/P5 —
-  * rastercube/imutils.py:5-17 rasterizes with PIL; we evaluate the
-  * predicate directly per pixel).
-  *
-  * Polygon is a closed or open ring of (x, y) vertices. Edge-inclusive
-  * behavior follows the standard crossing rule (half-open edges), which
-  * matches PIL's polygon fill to within border pixels; the reference's
-  * tests only assert interior/exterior pixels.
-  */
-object PointInPolygon {
-  def contains(poly: Array[(Double, Double)], px: Double, py: Double): Boolean = {
-    var inside = false
-    var i = 0
-    val n = poly.length
-    var j = n - 1
-    while (i < n) {
-      val (xi, yi) = poly(i)
-      val (xj, yj) = poly(j)
-      if ((yi > py) != (yj > py) &&
-          px < (xj - xi) * (py - yi) / (yj - yi) + xi) {
-        inside = !inside
-      }
-      j = i
-      i += 1
-    }
-    inside
-  }
-
-  /** Column form: a when-chain can't express the loop, so emit the
-    * crossing test as a fold over the polygon's edges — pure Column
-    * arithmetic, stays inside codegen (no UDF). Polygon is a literal
-    * (driver-side), so the fold unrolls at plan time.
-    */
-  def containsCol(poly: Array[(Double, Double)], px: Column, py: Column): Column = {
-    val n = poly.length
-    var acc: Column = lit(false)
-    var j = n - 1
-    var i = 0
-    while (i < n) {
-      val (xi, yi) = poly(i)
-      val (xj, yj) = poly(j)
-      val crosses = (lit(yi) > py) =!= (lit(yj) > py)
-      val xcross =
-        if (yj == yi) lit(Double.PositiveInfinity)
-        else lit(xj - xi) * (py - lit(yi)) / lit(yj - yi) + lit(xi)
-      acc = when(crosses && px < xcross, !acc).otherwise(acc)
-      j = i
-      i += 1
-    }
-    acc
-  }
 }

@@ -11,11 +11,11 @@ import graft.functions.ZonalStats
   * notebook-side loop of `load_poly_latlng` calls collapsed into ONE
   * distributed pass.
   *
-  * Membership is scan-converted once on the driver, the way Raptor
-  * (VLDB 2019) joins a vector layer with a raster: every region's ring
-  * becomes per-row pixel intervals ([[RegionIntervals]]), exactly the
-  * pixel centres the ray cast of [[graft.functions.PointInPolygonExpr]]
-  * (P5's mask) puts inside it. The table travels as a plan-time
+  * Membership is the [[RegionIntervals]] table, scan-converted once on
+  * the driver the way Raptor (VLDB 2019) joins a vector layer with a
+  * raster: every region's ring becomes per-row pixel intervals. It is
+  * the one membership rule of the polygon operators (P5's `in_poly` and
+  * [[rasterizeRegions]] read it too). The table travels as a plan-time
   * constant of the [[ZonalStats]] chunk kernel, which folds each chunk's
   * payload along the intervals that cross it: no pixel rows and no
   * per-pixel containment test, so a chunk's fold reads each covered
@@ -45,12 +45,7 @@ object GridZonal {
     require(repeated.isEmpty, "region names must be unique; repeated: " +
       repeated.map(n => s"'$n'").mkString(", "))
     val xyPolys = regions.map { case (name, ring) =>
-      require(ring.length >= 3,
-        s"region '$name' needs a ring of at least 3 vertices, got ${ring.length}")
-      val xy = ring.map { case (lat, lng) => header.latLngToXY(lat, lng) }
-      require(xy.forall { case (x, y) => x.isFinite && y.isFinite },
-        s"region '$name' has a vertex with no finite pixel position")
-      xy
+      RegionIntervals.pixelRing(header, s"region '$name'", ring)
     }
     // the union bbox, clamped to the grid: a region set fully outside
     // the grid yields an empty window, hence zero rows
@@ -113,10 +108,11 @@ object GridZonal {
     * region masking, and the missing half of the polygon round trip:
     * vector layers become first-class categorical rasters that every
     * grid operator — zonal stats, change matrix, pyramid mode levels —
-    * consumes directly). Pixel-center containment, FIRST matching
-    * region wins (callers order by priority), non-covered pixels are
-    * nodata. Generation is [[SyntheticGrid.writeDirect]]'s distributed
-    * per-chunk generator — one task per chunk, no input scan at all.
+    * consumes directly). Membership is one [[RegionIntervals]] table
+    * over the grid; the FIRST region holding a pixel wins (callers order
+    * by priority), non-covered pixels are nodata. Generation is
+    * [[SyntheticGrid.writeDirect]]'s distributed per-chunk generator —
+    * one task per chunk, no input scan at all.
     * Returns the written header (uint16 class codes = region index).
     */
   def rasterizeRegions(spark: SparkSession, geo: GridHeader,
@@ -127,18 +123,13 @@ object GridZonal {
     val h = geo.copy(name = geo.name + "_regions", dtype = "uint16",
       nodata = 65535.0,
       timestampsMs = geo.timestampsMs.take(1))
-    val xyPolys = regions.map { case (_, ring) =>
-      ring.map { case (lat, lng) => h.latLngToXY(lat, lng) }
-    }.toArray
+    val table = RegionIntervals(regions.map { case (name, ring) =>
+      RegionIntervals.pixelRing(h, s"region '$name'", ring)
+    }, 0, h.width, 0, h.height)
     val fn = new SyntheticGrid.PixelFn {
       def apply(x: Int, y: Int, t: Int): Double = {
-        var i = 0
-        while (i < xyPolys.length) {
-          if (PointInPolygon.contains(xyPolys(i), x + 0.5, y + 0.5))
-            return i.toDouble
-          i += 1
-        }
-        65535.0
+        val r = table.regionAt(x, y)
+        if (r < 0) 65535.0 else r.toDouble
       }
     }
     SyntheticGrid.writeDirect(spark, h, root, fn)
@@ -201,8 +192,11 @@ object GridZonal {
   * ordered by region; entry e puts pixels [xFrom(e), xTo(e)) of that row,
   * inside [x0, x1), in ring `region(e)`.
   *
-  * Membership is the ray cast of [[graft.functions.PointInPolygonExpr]]
-  * at pixel centres, bit for bit. For row y the centre line is
+  * The table IS pixel membership for every polygon operator: zonal
+  * statistics fold its intervals, P5's `in_poly` and rasterization look
+  * pixels up with [[regionAt]]. It equals, bit for bit, the even-odd ray
+  * cast at pixel centres, which stays in the tests as the oracle
+  * (`RegionIntervalsSpec`). For row y the centre line is
   * py = y + 0.5; each edge crossing it under the same predicate and the
   * same arithmetic, `(yi > py) != (yj > py)` and
   * `(xs(j) - xs(i)) * (py - yi) / (yj - yi) + xs(i)`, yields a crossing
@@ -217,6 +211,18 @@ final class RegionIntervals private (
     val rowStart: Array[Int], val region: Array[Int],
     val xFrom: Array[Int], val xTo: Array[Int]) extends Serializable {
 
+  /** The lowest region whose interval holds pixel (x, y), or -1. A
+    * row's entries are ordered by region, so the first hit is it. */
+  def regionAt(x: Int, y: Int): Int = {
+    if (y < y0 || y >= y1) return -1
+    var e = rowStart(y - y0)
+    while (e < rowStart(y - y0 + 1)) {
+      if (xFrom(e) <= x && x < xTo(e)) return region(e)
+      e += 1
+    }
+    -1
+  }
+
   /** Short on purpose: plan strings print the kernel that carries the
     * table. */
   override def toString: String =
@@ -225,6 +231,20 @@ final class RegionIntervals private (
 }
 
 object RegionIntervals {
+
+  /** `ring` ((lat, lng) vertices) in `header`'s pixel space, checked the
+    * way every polygon operator needs it: at least 3 vertices, every one
+    * at a finite pixel position (a NaN vertex would fall outside any
+    * window). `what` names the ring in the error. */
+  def pixelRing(header: GridHeader, what: String,
+                ring: Array[(Double, Double)]): Array[(Double, Double)] = {
+    require(ring.length >= 3,
+      s"$what needs a ring of at least 3 vertices, got ${ring.length}")
+    val xy = ring.map { case (lat, lng) => header.latLngToXY(lat, lng) }
+    require(xy.forall { case (x, y) => x.isFinite && y.isFinite },
+      s"$what has a vertex with no finite pixel position")
+    xy
+  }
 
   /** Scan-convert `rings` ((x, y) pixel-space vertices, closing vertex
     * optional) over the window [x0, x1) x [y0, y1). Each ring visits

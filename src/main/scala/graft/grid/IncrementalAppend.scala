@@ -14,7 +14,15 @@ import org.apache.spark.sql.functions._
   *  - chunking invariance: create(all) == create(prefix) + append(rest);
   *  - idempotence: appending already-present dates is a no-op;
   *  - the header's timestamps are the authoritative axis (dates CSV
-  *    analog), extended atomically with the data write.
+  *    analog).
+  *
+  * The axis is NOT extended atomically with the data write:
+  * [[FractionStore.replaceTimeChunks]] publishes the rewritten and new
+  * time chunks first, and only then does the header save add the dates.
+  * A run stopped in between leaves chunks holding dates the header
+  * lacks: window loads over the header's dates still read right, but
+  * the whole-store pixel view and the fused kernels can return the
+  * extra dates. Running the same append again repairs the store.
   *
   * Scale: the rewrite touches only time chunks >= c0 = floor(n0 /
   * fracNDates) — dynamic partition overwrite on the time_chunk

@@ -162,13 +162,17 @@ object Bpe {
     * unconditional persist made one-shot training materialize the full
     * exploded token frame for nothing). `idCol` is optional here —
     * training is doc-identity-free; a frame without it gets a
-    * synthesized id (but then cannot seed a shared chain cache, since
-    * later stages key on the real column). */
+    * synthesized id — unless `shareTokens` is set: later stages key
+    * the shared cache on the real column, so a cache over a synthesized
+    * id could never be reused, and the call is rejected. */
   def trainMerges(df: DataFrame, textCol: String = "text",
                   nMerges: Int = 50,
                   maxWords: Int = 1 << 20,
                   idCol: String = "doc_id",
                   shareTokens: Boolean = false): List[(String, String)] = {
+    require(!shareTokens || df.columns.contains(idCol),
+      s"shareTokens needs the id column '$idCol', which the frame lacks: " +
+        "no later stage could reuse a token cache keyed on a synthesized id")
     val wc = toksDf(df, idCol, textCol, share = shareTokens)
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("w")).limit(maxWords)

@@ -261,8 +261,8 @@ object GridQueries {
 
     // Zonal stats per NAMED REGION (GridZonal): the polygon-table
     // complement of per-class zonal stats — one pass over the union
-    // bbox, per-region codegen ray-cast membership, overlapping
-    // regions count pixels in both.
+    // bbox, membership from the regions' scanline-interval table,
+    // overlapping regions count pixels in both.
     "grid_zonal_regions" -> { (s, _) =>
       val root = tinyRoot(s)
       val h = GridHeader.load(s, root)

@@ -23,8 +23,9 @@ object OracleBuilders {
     if (s.contains('.') || s.contains('E') || s.contains('e')) s else s + ".0"
   }
 
-  /** Even-odd ray-cast parity as SQL, mirroring
-    * [[graft.functions.PointInPolygonExpr]] edge-for-edge: an edge
+  /** Even-odd ray-cast parity as SQL, an oracle independent of the
+    * engine's membership table ([[graft.grid.RegionIntervals]], which
+    * scan-converts rings with the same crossing arithmetic): an edge
     * crosses iff (yi > py) != (yj > py) and px is left of the
     * edge/scanline intersection. Horizontal edges (yi == yj) never
     * satisfy the first conjunct, so they are dropped up front (this also

@@ -7,8 +7,8 @@ import graft.grid._
 /** Bulk ingestion (reference: SRC4/SRC6/U3 —
   * create_ndvi_worldgrid.py:61-157's shared-memory pool choreography
   * becomes one declarative job: binaryFile scan -> per-partition decode
-  * -> chunk shuffle -> partitioned parquet write) and the file-index
-  * scan (SRC5, datasources/modis.py:30-110).
+  * -> chunk shuffle -> partitioned parquet write) and the MODIS
+  * filename parse (SRC5, datasources/modis.py:30-110).
   *
   * Blobs are named `<x0>_<y0>_<t0>.<ext>` for their grid origin. Blob
   * formats: NPY (the reference's own fraction serialization,
@@ -43,17 +43,6 @@ object Ingest {
       .withColumn("tile", concat(lit("h"),
         regexp_extract(name, ModisNameRegex, 3), lit("v"),
         regexp_extract(name, ModisNameRegex, 4)))
-
-  /** File-index scan of a landing directory: one row per blob with parsed
-    * name metadata (sorted-by-ts per tile downstream is an orderBy). */
-  def fileIndex(spark: SparkSession, dir: String, glob: String = "*"): DataFrame = {
-    val files = spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .load(dir)
-      .select(col("path"), col("length"),
-        element_at(split(col("path"), "/"), -1).as("name"))
-    parseModisName(col("name"))(files)
-  }
 
   /** Ingest a directory of NPY pixel blobs into a fraction store.
     * Blob naming: `<x0>_<y0>_<t0>.npy`, each a dense [h, w, nd] C-order

@@ -59,15 +59,6 @@ object NpyCodec {
     Npy(descr, shape, out)
   }
 
-  def descrFor(dtype: String): String = dtype match {
-    case "int16"   => "<i2"
-    case "uint16"  => "<u2"
-    case "uint8"   => "|u1"
-    case "int32"   => "<i4"
-    case "float32" => "<f4"
-    case "float64" => "<f8"
-  }
-
   def write(descr: String, shape: Seq[Int], data: Array[Double]): Array[Byte] = {
     val n = shape.product
     require(data.length == n)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** The exploded per-region zonal statistics: the union-bbox window load
   * exploded to pixel rows, every pixel ray-cast against every region
-  * with [[graft.functions.PointInPolygonExpr]], and the pixel rows
+  * with [[PointInPolygonExpr]], and the pixel rows
   * exploded once more on their membership array. The specs check
   * [[GridZonal.zonalByRegion]]'s interval kernel against it: same output
   * columns, types, groups and values. */
@@ -21,7 +21,7 @@ object ExplodedZonal {
     val df = FractionStore.loadSliceXY(spark, header, root,
       x0, x1, y0, y1, tFrom, tTo)
     val members = xyPolys.map { case (name, poly) =>
-      when(graft.functions.PointInPolygonExpr(poly,
+      when(PointInPolygonExpr(poly,
         col("x").cast("double") + lit(0.5),
         col("y").cast("double") + lit(0.5)), lit(name))
     }

@@ -85,42 +85,33 @@ class GeoTransformSpec extends AnyFunSuite {
     assert(!PointInPolygon.contains(ell, 8, 8))
   }
 
-  test("point-in-polygon: Column form agrees with scalar on a pixel grid") {
-    val spark = graft.TestSpark.spark
-    import org.apache.spark.sql.functions._
-    val poly = Array((1.5, 0.5), (8.2, 1.1), (9.0, 7.7), (3.3, 9.9), (0.2, 5.0))
-    val df = spark.range(100)
-      .withColumn("px", (col("id") % 10).cast("double") + 0.5)
-      .withColumn("py", expr("id div 10").cast("double") + 0.5)
-      .withColumn("inside", PointInPolygon.containsCol(poly, col("px"), col("py")))
-    df.collect().foreach { r =>
-      val expected = PointInPolygon.contains(poly, r.getDouble(1), r.getDouble(2))
-      assert(r.getBoolean(3) == expected, s"(${r.getDouble(1)},${r.getDouble(2)})")
-    }
-  }
-
   test("native codegen expression handles a 720-vertex polygon") {
     val spark = graft.TestSpark.spark
     import org.apache.spark.sql.functions._
-    // a 720-vertex circle of radius 4 centered at (5, 5): the unrolled
-    // fold would emit ~720 nested whens; the native expression loops
+    import graft.functions.RegionAtExpr
+    // a 720-vertex circle of radius 4 centered at (5, 5): the lookup in
+    // its interval table compiles to the same code as a square's
     val circle = Array.tabulate(720) { k =>
       val a = 2 * math.Pi * k / 720
       (5.0 + 4.0 * math.cos(a), 5.0 + 4.0 * math.sin(a))
     }
-    val df = spark.range(100)
-      .withColumn("px", (col("id") % 10).cast("double") + 0.5)
-      .withColumn("py", expr("id div 10").cast("double") + 0.5)
-      .withColumn("inside",
-        graft.functions.PointInPolygonExpr(circle, col("px"), col("py")))
-    df.collect().foreach { r =>
-      val (px, py) = (r.getDouble(1), r.getDouble(2))
+    val square = Array((1.0, 1.0), (9.0, 1.0), (9.0, 9.0), (1.0, 9.0))
+    def inside(ring: Array[(Double, Double)]) = spark.range(100)
+      .select((col("id") % 10).cast("int").as("x"),
+        expr("id div 10").cast("int").as("y"))
+      .withColumn("inside", RegionAtExpr(
+        RegionIntervals(Seq(ring), 0, 10, 0, 10), col("x"), col("y")) >= 0)
+    def code(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.debug.codegenToSeq().map(_._2).mkString
+    assert(code(inside(circle)) == code(inside(square)))
+    inside(circle).collect().foreach { r =>
+      val (px, py) = (r.getInt(0) + 0.5, r.getInt(1) + 0.5)
       val expected = math.hypot(px - 5, py - 5) < 4.0 // well off the rim
       if (math.abs(math.hypot(px - 5, py - 5) - 4.0) > 0.1) {
-        assert(r.getBoolean(3) == expected, s"($px,$py)")
+        assert(r.getBoolean(2) == expected, s"($px,$py)")
       }
       val scalar = PointInPolygon.contains(circle, px, py)
-      assert(r.getBoolean(3) == scalar, s"scalar mismatch ($px,$py)")
+      assert(r.getBoolean(2) == scalar, s"scalar mismatch ($px,$py)")
     }
   }
 }

@@ -2,7 +2,6 @@ package graft.grid
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.catalyst.expressions.Literal
-import graft.functions.PointInPolygonExpr
 
 /** The scanline table must hold exactly the pixel centres the ray cast
   * puts inside each ring, over the whole grid (outside the window the

@@ -230,4 +230,18 @@ class BpeSpec extends AnyFunSuite {
     assert(Bpe.trainMerges(bare, nMerges = 3) == merges)
     assert(Bpe.vocab(bare, merges) == syms)
   }
+
+  test("trainMerges rejects shareTokens on a frame without its id column") {
+    // the shared cache would be keyed on a synthesized id no later stage
+    // reads: a corpus-sized persist nothing can reuse
+    def bpeCachedIds: Set[Int] = spark.sparkContext.getPersistentRDDs
+      .filter(_._2.toString.contains("Bpe.scala")).keySet.toSet
+    val bare = Seq("low low lower", "newest widest").toDF("text")
+    val before = bpeCachedIds
+    val err = intercept[IllegalArgumentException] {
+      Bpe.trainMerges(bare, nMerges = 3, shareTokens = true)
+    }
+    assert(err.getMessage.contains("'doc_id'"), err.getMessage)
+    assert(bpeCachedIds == before)
+  }
 }
