@@ -107,5 +107,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer) so it sees the lat/lng attributes before predicate
     // pushdown substitutes them away.
     e.injectPostHocResolutionRule(_ => graft.plans.LatLngPruning.Rule)
+    // per-query bounds out of generated code: queries of one shape at
+    // other offsets reuse the compiled classes. Before the columnar
+    // transitions, so before whole-stage codegen collapses the plan.
+    e.injectColumnar(_ => new org.apache.spark.sql.execution.ColumnarRule {
+      override def preColumnarTransitions = graft.plans.ParamLiterals
+    })
   }
 }

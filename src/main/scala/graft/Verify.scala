@@ -67,6 +67,9 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the session users run: the oracle gate checks every entry
+      // under the engine's planner rules
+      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val unknown = only -- SparkEntry.queries.keySet

@@ -476,7 +476,9 @@ object FractionStore {
   /** Explode fraction rows to the relational pixel view
     * (x, y, t, value) — the deterministic explode of SURVEY §1.4, as
     * the one-store case of [[explodePixels]]. `maskNodata=true` turns
-    * the header's nodata into NULL (P9).
+    * the header's nodata into NULL (P9). Dates past `header.nDates` (a
+    * chunk an append wrote before a header save that never came) are
+    * left out: the view is the store its header describes.
     *
     * `keepChunkCols` passes the STORED frac_x/frac_y/time_chunk through
     * the explode: predicates on them (e.g. added by the LatLngPruning
@@ -488,6 +490,7 @@ object FractionStore {
     explodePixels(Seq(header), fracRows.withColumnRenamed("data", "data_0"),
       Seq(maskNodata),
       if (keepChunkCols) Seq("frac_x", "frac_y", "time_chunk") else Nil)
+      .filter(col("t") < header.nDates)
       .withColumnRenamed("value_0", "value")
 
   /** Rectangular window load as a pixel DataFrame — the P3
@@ -516,7 +519,16 @@ object FractionStore {
     * `masks(i)` turns store i's nodata into NULL (P9 per band).
     * joinType "left": chunks absent from a secondary store keep the
     * base store's pixels with NULL for that band (unpack of a NULL
-    * payload is NULL; element_at on a NULL array is NULL).
+    * payload is NULL; element_at on a NULL array is NULL). Dates past
+    * the headers' `nDates` are not read (a torn append's tail).
+    *
+    * The box filter's bounds, like the chunk ranges of
+    * [[fractionsForWindow]], are literals in the logical plan; under
+    * [[graft.GraftExtensions]] the physical rule
+    * [[graft.plans.ParamLiterals]] makes them parameters of the
+    * generated code, so every window of a shape reuses one compiled
+    * per-pixel loop. The scan's pushed and partition filters stay
+    * literals.
     */
   def loadAlignedSliceXY(spark: SparkSession,
                          stores: Seq[(GridHeader, String)],
@@ -530,7 +542,7 @@ object FractionStore {
     explodePixels(stores.map(_._1), chunks, masks)
       .filter(col("x") >= xFrom && col("x") < xTo &&
         col("y") >= yFrom && col("y") < yTo &&
-        col("t") >= tFrom && col("t") < tTo)
+        col("t") >= tFrom && col("t") < math.min(tTo, stores.map(_._1.nDates).min))
   }
 
   // ---- bucketed chunk tables (J2: zero-shuffle co-located joins) ------

@@ -24,7 +24,12 @@ object GridKernels {
   /** Prune each store to the kernel's box, pair the stores' chunk rows
     * with the one aligned join ([[FractionStore.alignedJoin]]: shared
     * geogrid + time chunking, matching `nd` per chunk), run the kernel
-    * once per chunk row and explode its entries into column `s`. */
+    * once per chunk row and explode its entries into column `s`.
+    *
+    * The box reaches the generated code only by reference: the kernel
+    * holds it, and the chunk-range filters' bounds become parameters
+    * under [[graft.GraftExtensions]] ([[graft.plans.ParamLiterals]]), so
+    * a query at another offset reuses the compiled classes. */
   private[grid] def scan(spark: SparkSession, stores: Seq[(GridHeader, String)],
                    kernel: ChunkKernel): DataFrame = {
     val b = kernel.box
@@ -44,6 +49,13 @@ object GridKernels {
         s"${header.fracNDates} dates; use GridTimeSeries.$relational over " +
         "loadSliceXY for ranges that straddle slabs")
 
+  /** A query's kernel box, its dates clipped to the headers': a chunk
+    * that holds dates past `nDates` (an append stopped between its data
+    * write and its header save) reads as the store its header describes. */
+  private def box(headers: Seq[GridHeader], xFrom: Int, xTo: Int,
+                  yFrom: Int, yTo: Int, tFrom: Int, tTo: Int): Box =
+    Box(xFrom, xTo, yFrom, yTo, tFrom, math.min(tTo, headers.map(_.nDates).min))
+
   /** Per-date statistics of one grid over a pixel/time box — the fused
     * form of `loadSliceXY(...).groupBy(t).agg(...)` (the P3 window-load
     * hot path without the pixel explode). Output: (t, mean_v, n_valid,
@@ -54,7 +66,7 @@ object GridKernels {
                   xFrom: Int, xTo: Int, yFrom: Int, yTo: Int,
                   tFrom: Int, tTo: Int): DataFrame =
     scan(spark, Seq((header, root)), BoxStats(PayloadCodec.code(header.dtype),
-        Box(xFrom, xTo, yFrom, yTo, tFrom, tTo), header.nodata))
+        box(Seq(header), xFrom, xTo, yFrom, yTo, tFrom, tTo), header.nodata))
       .groupBy(col("s.t").as("t"))
       .agg(sum(col("s.sum_v")).as("sv"), sum(col("s.n_valid")).as("nv"),
         sum(col("s.n_total")).as("n"),
@@ -72,7 +84,7 @@ object GridKernels {
              xFrom: Int, xTo: Int, yFrom: Int, yTo: Int,
              tFrom: Int, tTo: Int): DataFrame =
     scan(spark, Seq((header, root)), BoxStats(PayloadCodec.code(header.dtype),
-        Box(xFrom, xTo, yFrom, yTo, tFrom, tTo), header.nodata))
+        box(Seq(header), xFrom, xTo, yFrom, yTo, tFrom, tTo), header.nodata))
       .agg(sum(col("s.sum_v")).as("sv"), sum(col("s.n_valid")).as("nv"),
         min(col("s.min_v")).as("min_v"), max(col("s.max_v")).as("max_v"))
       .select(coalesce(col("nv"), lit(0L)).as("n_valid"),
@@ -92,7 +104,7 @@ object GridKernels {
                         tFrom: Int, tTo: Int, roundTo: Int = 6): DataFrame = {
     requireOneSlab(header, tFrom, tTo, "trend", "trendSlope")
     scan(spark, Seq((header, root)), TrendSlopes(PayloadCodec.code(header.dtype),
-        Box(xFrom, xTo, yFrom, yTo, tFrom, tTo), header.nodata, roundTo))
+        box(Seq(header), xFrom, xTo, yFrom, yTo, tFrom, tTo), header.nodata, roundTo))
       .select(col("s.x").as("x"), col("s.y").as("y"),
         col("s.n").as("n"), col("s.slope").as("slope"))
   }
@@ -112,7 +124,7 @@ object GridKernels {
     require(trainT >= 1, s"trainT must be >= 1, got $trainT")
     requireOneSlab(header, tFrom, tTo, "cusum", "cusumDetect")
     scan(spark, Seq((header, root)), Cusum(PayloadCodec.code(header.dtype),
-        Box(xFrom, xTo, yFrom, yTo, tFrom, tTo), header.nodata,
+        box(Seq(header), xFrom, xTo, yFrom, yTo, tFrom, tTo), header.nodata,
         trainT, math.rint(slack * 1e6), math.rint(threshold * 1e6), roundTo))
       .select(col("s.x").as("x"), col("s.y").as("y"), col("s.t").as("t"),
         col("s.cusum").as("cusum"), col("s.alarm").as("alarm"))
@@ -131,7 +143,7 @@ object GridKernels {
     require(qh.dtype == "uint16",
       s"fused masked mean needs a uint16 QA store; ${qh.name} is ${qh.dtype}")
     scan(spark, Seq(value, qa), MaskedBoxStats(PayloadCodec.code(vh.dtype),
-        Box(xFrom, xTo, yFrom, yTo, tFrom, tTo), vh.nodata))
+        box(Seq(vh, qh), xFrom, xTo, yFrom, yTo, tFrom, tTo), vh.nodata))
       .groupBy(col("s.t").as("t"))
       .agg(sum(col("s.sum_v")).as("sv"), sum(col("s.n_clear")).as("nc"),
         sum(col("s.n_total")).as("n"))

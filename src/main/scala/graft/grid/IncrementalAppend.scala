@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
   * [[FractionStore.replaceTimeChunks]] publishes the rewritten and new
   * time chunks first, and only then does the header save add the dates.
   * A run stopped in between leaves chunks holding dates the header
-  * lacks: window loads over the header's dates still read right, but
-  * the whole-store pixel view and the fused kernels can return the
-  * extra dates. Running the same append again repairs the store.
+  * lacks. Reads clip to the header's dates (window loads, the
+  * whole-store pixel view, the fused and zonal kernels), so such a store
+  * reads as the old one. Running the same append again repairs it.
   *
   * Scale: the rewrite touches only time chunks >= c0 = floor(n0 /
   * fracNDates) — dynamic partition overwrite on the time_chunk

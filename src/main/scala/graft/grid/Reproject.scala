@@ -1,7 +1,8 @@
 package graft.grid
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** Reprojection join (reference: J3 — the one genuinely hard kernel,
   * rastercube/jgrid/utils.py:164-280, GDAL ReprojectImage with
@@ -317,16 +318,22 @@ object Reproject {
     }: _*)
   }
 
-  /** Target lattice for a dst window (payload-free). */
+  /** Target lattice for a dst window (payload-free): the window's
+    * bounds as one row of data, exploded row by row. The window's size
+    * is data, not code, so windows of any size share the generated
+    * classes (a `spark.range` count is inlined into its code). */
   private def targetLattice(spark: SparkSession,
                             xFrom: Int, xTo: Int,
                             yFrom: Int, yTo: Int): DataFrame = {
-    val w = xTo - xFrom
-    val hgt = yTo - yFrom
-    spark.range(w.toLong * hgt)
-      .withColumn("x", (col("id") % w).cast("int") + xFrom)
-      .withColumn("y", expr(s"id div $w").cast("int") + yFrom)
-      .drop("id")
+    val bounds = StructType(Seq("x_from", "x_to", "y_from", "y_to")
+      .map(StructField(_, IntegerType, nullable = false)))
+    val rows = if (xTo > xFrom && yTo > yFrom)
+      java.util.List.of(Row(xFrom, xTo, yFrom, yTo))
+    else java.util.List.of[Row]()
+    spark.createDataFrame(rows, bounds)
+      .select(col("x_from"), col("x_to"),
+        explode(sequence(col("y_from"), col("y_to") - 1)).as("y"))
+      .select(explode(sequence(col("x_from"), col("x_to") - 1)).as("x"), col("y"))
   }
 
   /** [[bilinear]] semantics through the fused chunk-gather path — same

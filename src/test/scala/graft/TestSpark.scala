@@ -16,6 +16,20 @@ object TestSpark {
     s
   }
 
+  /** A new session on the shared context with [[GraftExtensions]]
+    * installed, as users run the engine. The shared session stays
+    * without it (rule specs compare against a rule-free baseline), and
+    * stays the active and default session. */
+  def withGraftExtensions(): SparkSession = {
+    spark
+    val s = SparkSession.builder()
+      .withExtensions(new GraftExtensions)
+      .create()
+    SparkSession.setDefaultSession(spark)
+    SparkSession.setActiveSession(spark)
+    s
+  }
+
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 

@@ -150,4 +150,33 @@ class IncrementalAppendSpec extends AnyFunSuite {
     }
     assert(leaked.isEmpty, s"checkpoint blocks left behind: $leaked")
   }
+
+  test("an append stopped before its header save reads as the old store") {
+    val n0 = 5
+    val hPre = mkHeader(3, allTs.take(n0))
+    val px = SyntheticGrid.pixelDf(spark, hPre, SyntheticGrid.tinyValue)
+    val root = writeStore("inc_torn", hPre, px)
+    val ref = writeStore("inc_torn_ref", hPre, px)
+    // appendDates' data write without its header save: the grown tail
+    // chunk 1 and the new chunk 2 hold dates 5 and 6, the header says 5
+    val h1 = hPre.copy(timestampsMs = allTs)
+    val newAbs = pixelsFor(hPre, n0, nDatesTotal).withColumn("t", col("t") + n0)
+    FractionStore.replaceTimeChunks(root, FractionStore.fromPixels(spark, h1, newAbs,
+      Some(FractionStore.fractions(spark, root).filter(col("time_chunk") === 1))))
+    val h = GridHeader.load(spark, root)
+    assert(h == hPre)
+
+    def rows(df: DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    def same(what: String, read: String => DataFrame): Unit =
+      assert(rows(read(root)) == rows(read(ref)), what)
+    same("boxStatsByT", r => GridKernels.boxStatsByT(spark, h, r, 0, 30, 0, 20, 0, 7))
+    same("trendSlopeByPixel", r => GridKernels.trendSlopeByPixel(spark, h, r, 0, 30, 0, 20, 3, 6))
+    same("cusumByPixel", r =>
+      GridKernels.cusumByPixel(spark, h, r, 0, 30, 0, 20, 3, 6, 4, 0.1, 0.5))
+    same("zonalByRegion", r => GridZonal.zonalByRegion(spark, h, r,
+      Seq(("box", Array((-2.0, 2.0), (-2.0, 12.0), (-15.0, 12.0), (-15.0, 2.0)))), 0, 7))
+    same("loadSliceXY", r => FractionStore.loadSliceXY(spark, h, r, 0, 30, 0, 20, 0, 7))
+    same("pixels", r => FractionStore.pixels(h, FractionStore.fractions(spark, r)))
+    assert(FractionStore.pixels(h, FractionStore.fractions(spark, root)).count() == 600L * n0)
+  }
 }
