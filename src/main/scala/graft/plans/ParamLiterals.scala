@@ -2,9 +2,9 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, EmptyBlock, ExprCode, FalseLiteral, JavaCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, CodegenFallback, EmptyBlock, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, InSubqueryExec, ProjectExec, SparkPlan, SubqueryAdaptiveBroadcastExec}
 import org.apache.spark.sql.types._
 
 /** A non-null primitive literal whose generated code reads its value
@@ -41,6 +41,25 @@ final case class ParamLiteral(value: Any, dataType: DataType) extends LeafExpres
   override def sql: String = literal.sql
 }
 
+/** A dynamic partition-pruning test whose generated code calls `eval`
+  * on it, held by reference. Spark's [[InSubqueryExec]] generates a
+  * `switch` over the values its subquery returned, so every query's
+  * pruning set (the time chunks of an aligned join's broadcast side)
+  * would compile a predicate class of its own. The test runs once per
+  * partition directory on the driver, so interpreting it costs nothing.
+  */
+final case class PruningByReference(child: InSubqueryExec)
+    extends UnaryExpression with Predicate with CodegenFallback {
+  override def nullable: Boolean = child.nullable
+  override def eval(input: InternalRow): Any = child.eval(input)
+  override protected def withNewChildInternal(c: Expression): PruningByReference =
+    copy(child = c.asInstanceOf[InSubqueryExec])
+
+  // plans print as they would over the subquery test
+  override def toString: String = child.toString
+  override def sql: String = child.sql
+}
+
 /** The physical rule that takes per-query constants out of generated
   * code: every non-null primitive literal that is an operand of a
   * comparison or of an arithmetic operator, inside the conditions of
@@ -57,8 +76,15 @@ final case class ParamLiteral(value: Any, dataType: DataType) extends LeafExpres
   * and string literals stay literals: only int, long, short, byte, float
   * and double values are inlined by Spark's codegen.
   *
+  * A file scan's dynamic partition-pruning test is the one change to a
+  * scan: it becomes a [[PruningByReference]], so a new pruning set
+  * compiles nothing either. The static partition filters beside it,
+  * which prune the file listing, are not touched.
+  *
   * Runs before whole-stage codegen collapses the plan, as the
-  * pre-columnar-transition rule [[graft.GraftExtensions]] injects.
+  * pre-columnar-transition rule [[graft.GraftExtensions]] injects. By
+  * then Spark has planned the pruning subqueries (adaptive execution
+  * plans them per query stage, before the columnar rules).
   */
 object ParamLiterals extends Rule[SparkPlan] {
 
@@ -79,9 +105,18 @@ object ParamLiterals extends Rule[SparkPlan] {
       op.withNewChildren(op.children.map(param))
   }
 
+  private def pruning(e: Expression): Expression = e match {
+    case DynamicPruningExpression(in: InSubqueryExec)
+        if !in.plan.isInstanceOf[SubqueryAdaptiveBroadcastExec] =>
+      DynamicPruningExpression(PruningByReference(in))
+    case other => other
+  }
+
   override def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
     case f: FilterExec => f.copy(condition = params(f.condition))
     case p: ProjectExec =>
       p.copy(projectList = p.projectList.map(params(_).asInstanceOf[NamedExpression]))
+    case s: FileSourceScanExec if s.partitionFilters.exists(e => pruning(e) ne e) =>
+      s.copy(partitionFilters = s.partitionFilters.map(pruning))
   }
 }

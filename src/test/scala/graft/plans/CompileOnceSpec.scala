@@ -3,7 +3,8 @@ package graft.plans
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.catalyst.expressions.DynamicPruningExpression
+import org.apache.spark.sql.execution.{FileSourceScanExec, InSubqueryExec}
 import org.apache.spark.sql.functions._
 
 import graft.TestSpark
@@ -137,5 +138,37 @@ class CompileOnceSpec extends AnyFunSuite {
       rows(Reproject.bilinearGather(ext, nh, ndviRoot, dst, 40, 61, 30, 39, 1))
     }
     assert(n == 0, s"a 21x9 lattice compiled $n classes")
+  }
+
+  test("a dynamic partition-pruning set compiles nothing new") {
+    // a partitioned table joined to a small filtered one: the small side
+    // is broadcast and its join keys prune the partitions at run time
+    val root = TestSpark.tmpDir("once_dpp")
+    base.range(0, 4000).select((col("id") % 8).as("p"), col("id").as("v"))
+      .write.partitionBy("p").parquet(s"$root/fact")
+    base.range(0, 8).select(col("id").as("p"), (col("id") * 10).as("w"))
+      .write.parquet(s"$root/dim")
+    def query(s: SparkSession, lo: Int, hi: Int): DataFrame =
+      s.read.parquet(s"$root/fact")
+        .join(s.read.parquet(s"$root/dim").filter(col("w").between(lo, hi)), "p")
+        .groupBy(col("p")).agg(sum(col("v")).as("sv"))
+    def pruningTests(df: DataFrame) =
+      TestSpark.walkPlan(df.queryExecution.executedPlan).collect {
+        case s: FileSourceScanExec => s.partitionFilters
+      }.flatten.collect { case DynamicPruningExpression(e) => e }
+    val warm = query(ext, 10, 30)
+    val got1 = rows(warm)
+    val again = query(ext, 40, 60)
+    var got2: Seq[String] = Nil
+    val n = compiles { got2 = rows(again) }
+    assert(n == 0, s"another pruning set compiled $n classes")
+    assert(got1 == rows(query(base, 10, 30)) && got1.size == 3)
+    assert(got2 == rows(query(base, 40, 60)) && got2.size == 3)
+    assert(pruningTests(again).exists(_.isInstanceOf[PruningByReference]),
+      again.queryExecution.executedPlan.toString)
+    val literal = query(base, 40, 60)
+    rows(literal)
+    assert(pruningTests(literal).exists(_.isInstanceOf[InSubqueryExec]),
+      "the base session plans no dynamic pruning: the test joins nothing to prune")
   }
 }
