@@ -437,6 +437,13 @@ object FractionStore {
     * value_{n-1}), preceded by `chunkCols` when given. `masks(i)` turns
     * payload i's nodata into NULL (P9 per band).
     *
+    * Each band reads only the dates its header holds: rows at or past
+    * the base header's `nDates` are dropped, and band i > 0 is NULL at
+    * or past its own. A chunk an append wrote before a header save that
+    * never came thus reads as the store its header describes, and a
+    * band with fewer dates than the base (a "left" aligned join) keeps
+    * the base pixels with NULL for that band.
+    *
     * Payloads 1..n-1 are unpacked in ONE projection below the generator
     * and indexed per pixel with element_at on the materialized arrays
     * (O(1) each): Catalyst does not CSE into generators, and element_at
@@ -459,26 +466,31 @@ object FractionStore {
       posexplode(unpack(headers.head, col("data_0"))).as(Seq("pos", "value_0")): _*)
     // one projection (each withColumn would re-analyze the growing plan)
     val pix = expr("pos div nd").cast("int")
+    val t = col("t0") + col("pos") % col("nd")
     val xyt = Seq((col("x0") + pix % col("w")).as("x"),
       (col("y0") + expr("cast(pos div nd as int) div w").cast("int")).as("y"),
-      (col("t0") + col("pos") % col("nd")).as("t"))
+      t.as("t"))
     val values = headers.zip(masks).zipWithIndex.map { case ((h, mask), i) =>
       val raw = if (i == 0) col("value_0")
-                else element_at(col(s"arr_$i"), col("pos") + 1)
+                else when(t < h.nDates, element_at(col(s"arr_$i"), col("pos") + 1))
       val v = if (mask && !h.nodata.isNaN)
         nullif(raw, lit(h.nodata).cast(elementType(h.dtype)))
       else raw
       v.as(s"value_$i")
     }
-    exploded.select(chunkCols.map(col) ++ xyt ++ values: _*)
+    // the base clip, as chunk-local date < dates left in the chunk: a
+    // test on `t` could equal a caller's (`t < tTo` at the last date),
+    // the optimizer would drop the duplicate, and that window would
+    // plan (and compile) a shape of its own
+    exploded.filter(col("pos") % col("nd") < lit(headers.head.nDates) - col("t0"))
+      .select(chunkCols.map(col) ++ xyt ++ values: _*)
   }
 
   /** Explode fraction rows to the relational pixel view
     * (x, y, t, value) — the deterministic explode of SURVEY §1.4, as
     * the one-store case of [[explodePixels]]. `maskNodata=true` turns
-    * the header's nodata into NULL (P9). Dates past `header.nDates` (a
-    * chunk an append wrote before a header save that never came) are
-    * left out: the view is the store its header describes.
+    * the header's nodata into NULL (P9). Dates past `header.nDates` are
+    * left out (see [[explodePixels]]).
     *
     * `keepChunkCols` passes the STORED frac_x/frac_y/time_chunk through
     * the explode: predicates on them (e.g. added by the LatLngPruning
@@ -490,7 +502,6 @@ object FractionStore {
     explodePixels(Seq(header), fracRows.withColumnRenamed("data", "data_0"),
       Seq(maskNodata),
       if (keepChunkCols) Seq("frac_x", "frac_y", "time_chunk") else Nil)
-      .filter(col("t") < header.nDates)
       .withColumnRenamed("value_0", "value")
 
   /** Rectangular window load as a pixel DataFrame — the P3
@@ -519,8 +530,8 @@ object FractionStore {
     * `masks(i)` turns store i's nodata into NULL (P9 per band).
     * joinType "left": chunks absent from a secondary store keep the
     * base store's pixels with NULL for that band (unpack of a NULL
-    * payload is NULL; element_at on a NULL array is NULL). Dates past
-    * the headers' `nDates` are not read (a torn append's tail).
+    * payload is NULL; element_at on a NULL array is NULL), as do
+    * dates past a secondary header's `nDates` ([[explodePixels]]).
     *
     * The box filter's bounds, like the chunk ranges of
     * [[fractionsForWindow]], are literals in the logical plan; under
@@ -542,7 +553,7 @@ object FractionStore {
     explodePixels(stores.map(_._1), chunks, masks)
       .filter(col("x") >= xFrom && col("x") < xTo &&
         col("y") >= yFrom && col("y") < yTo &&
-        col("t") >= tFrom && col("t") < math.min(tTo, stores.map(_._1.nDates).min))
+        col("t") >= tFrom && col("t") < tTo)
   }
 
   // ---- bucketed chunk tables (J2: zero-shuffle co-located joins) ------

@@ -52,7 +52,7 @@ object GridKernels {
   /** A query's kernel box, its dates clipped to the headers': a chunk
     * that holds dates past `nDates` (an append stopped between its data
     * write and its header save) reads as the store its header describes. */
-  private def box(headers: Seq[GridHeader], xFrom: Int, xTo: Int,
+  private[grid] def box(headers: Seq[GridHeader], xFrom: Int, xTo: Int,
                   yFrom: Int, yTo: Int, tFrom: Int, tTo: Int): Box =
     Box(xFrom, xTo, yFrom, yTo, tFrom, math.min(tTo, headers.map(_.nDates).min))
 

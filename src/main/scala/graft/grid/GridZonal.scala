@@ -50,10 +50,10 @@ object GridZonal {
     // the union bbox, clamped to the grid: a region set fully outside
     // the grid yields an empty window, hence zero rows
     val (x0, x1, y0, y1) = header.pixelBox(xyPolys.flatten)
-    // dates past the header's (a torn append) are not the store's
+    val b = GridKernels.box(Seq(header), x0, x1, y0, y1, tFrom, tTo)
     val kernel = ZonalStats(PayloadCodec.code(header.dtype),
-      RegionIntervals(xyPolys, x0, x1, y0, y1), tFrom,
-      math.min(tTo, header.nDates), header.nodata)
+      RegionIntervals(xyPolys, b.xFrom, b.xTo, b.yFrom, b.yTo),
+      b.tFrom, b.tTo, header.nodata)
     GridKernels.scan(spark, Seq((header, root)), kernel)
       .groupBy(col("s.region").as("r"), col("s.t").as("t"))
       .agg(sum(col("s.sum_v")).as("sv"), sum(col("s.n_valid")).as("nv"),

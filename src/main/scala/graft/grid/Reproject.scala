@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
+import scala.jdk.CollectionConverters._
+
 /** Reprojection join (reference: J3 — the one genuinely hard kernel,
   * rastercube/jgrid/utils.py:164-280, GDAL ReprojectImage with
   * near/mode/average).
@@ -318,21 +320,20 @@ object Reproject {
     }: _*)
   }
 
-  /** Target lattice for a dst window (payload-free): the window's
-    * bounds as one row of data, exploded row by row. The window's size
-    * is data, not code, so windows of any size share the generated
-    * classes (a `spark.range` count is inlined into its code). */
+  /** Target lattice for a dst window (payload-free): one row of data
+    * per lattice row (y, x_from, x_to), each exploded to its pixels.
+    * The window's size is data, not code, so windows of any size share
+    * the generated classes (a `spark.range` count is inlined into its
+    * code); the local scan spreads the rows over up to
+    * defaultParallelism partitions, as `spark.range` did. */
   private def targetLattice(spark: SparkSession,
                             xFrom: Int, xTo: Int,
                             yFrom: Int, yTo: Int): DataFrame = {
-    val bounds = StructType(Seq("x_from", "x_to", "y_from", "y_to")
+    val rowSchema = StructType(Seq("y", "x_from", "x_to")
       .map(StructField(_, IntegerType, nullable = false)))
-    val rows = if (xTo > xFrom && yTo > yFrom)
-      java.util.List.of(Row(xFrom, xTo, yFrom, yTo))
-    else java.util.List.of[Row]()
-    spark.createDataFrame(rows, bounds)
-      .select(col("x_from"), col("x_to"),
-        explode(sequence(col("y_from"), col("y_to") - 1)).as("y"))
+    val rows = if (xTo > xFrom) (yFrom until yTo).map(Row(_, xFrom, xTo))
+               else Nil
+    spark.createDataFrame(rows.asJava, rowSchema)
       .select(explode(sequence(col("x_from"), col("x_to") - 1)).as("x"), col("y"))
   }
 

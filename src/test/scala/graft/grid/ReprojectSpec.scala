@@ -276,6 +276,28 @@ class ReprojectSpec extends AnyFunSuite {
     }
   }
 
+  test("same-geogrid align keeps base pixels at dates a band lacks (J1)") {
+    // the base holds 2 dates (2 time chunks); the second band, srcHeader,
+    // holds 1: at t = 1 its header and its chunks stop short of the base
+    val twoH = srcHeader.copy(name = "two_dates", timestampsMs = Seq(0L, 1L))
+    val twoRoot = TestSpark.tmpDir("align_two_dates")
+    FractionStore.write(spark, twoH,
+      FractionStore.fromPixels(spark, twoH,
+        SyntheticGrid.pixelDf(spark, twoH, valueFn)), twoRoot)
+    Seq(0, 1).foreach { t =>
+      val rows = Reproject.alignOnFirst(spark,
+        Seq((twoH, twoRoot), (srcHeader, srcRoot)), 0, 20, 0, 20, t).collect()
+      assert(rows.length == 400, s"t = $t")
+      rows.foreach { r =>
+        val (x, y) = (r.getAs[Int]("x"), r.getAs[Int]("y"))
+        val v = (x * 100 + y).toFloat
+        assert(r.getAs[Float]("value_0") == v, s"value_0 at ($x, $y, $t)")
+        assert(Option(r.getAs[Any]("value_1")) == (if (t == 0) Some(v) else None),
+          s"value_1 at ($x, $y, $t)")
+      }
+    }
+  }
+
   test("cross-SR align: sinusoidal grid warped onto wgs84 lattice (J1)") {
     // sinusoidal grid covering roughly the same small area near (0,0):
     // 0.01 deg ~ 1111.95 m at the equator
